@@ -6,7 +6,7 @@ T6 negation — see ``textproc.py`` for exact semantics + citations) and emits a
 compact struct instead of a heterogeneous object stream:
 
     (n_terms, mentions[(pos,value)], frames[(pos,frame_id,negated)],
-     terms[(kind,text)]?)
+     terms[(kind,text,aux)]?)
 
 ``with_terms=False`` is the hot path for triple extraction: only mention/frame
 positions and the term count travel through the shuffle — at 100 TB the term
@@ -22,7 +22,6 @@ the equivalent struct-building pandas UDF at identical output.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -38,63 +37,35 @@ MENTION_T = StructType([
     StructField("pos", IntegerType()),
     StructField("value", StringType()),
 ])
-# mention struct when synonym-group / entity-type lookup is folded into the
-# parse closure (turn-local pipeline): J7a's sid is trim(lower(value)), and
-# bracket values are already lowercase whitespace-free tokens, so the Python
-# dict lookup here is exactly ``with_group_key`` (operators/grouping.py).
-MENTION_ANNOT_T = StructType([
-    StructField("pos", IntegerType()),
-    StructField("value", StringType()),
-    StructField("group_key", StringType()),
-    StructField("ent_type", StringType()),
-])
 FRAME_T = StructType([
     StructField("pos", IntegerType()),
     StructField("frame_id", StringType()),
     StructField("negated", BooleanType()),
 ])
+# ``kind`` has exactly 4 values (w|t|e|f) and ships as int8 codes IN THE
+# SCHEMA. The Arrow-boundary alternative — per-batch dictionary arrays — is
+# rejected by Spark's vectorized reader (ArrowColumnVector has no dictionary
+# getUTF8String accessor; verified on 4.1.2), and a 1-char string element in
+# an UnsafeArrayData struct costs an 8-byte offset+len word plus 8-byte-
+# aligned payload vs 1 byte for a tinyint. The interleaved A/B against
+# letter strings (BASELINE.md) measured identical output with walls 5.3%
+# lower at 8 cores and 15% at 32 cores on the sf1 input. Consumers
+# (operators/samples.py) compare against ``KIND_CODES``.
+KIND_CODES = {"w": 0, "t": 1, "e": 2, "f": 3}
 TERM_T = StructType([
-    StructField("kind", StringType()),
+    StructField("kind", ByteType()),
     StructField("text", StringType()),
     StructField("aux", StringType()),   # frame terms: matched variant phrase
 ])
-
-# --- terms.kind physical encoding lever (round-4 verdict item 9) ---------
-# ``kind`` has exactly 4 values (w|t|e|f). The Arrow-boundary alternative —
-# per-batch dictionary arrays — is rejected by Spark's vectorized reader
-# (ArrowColumnVector has no dictionary getUTF8String accessor; verified on
-# 4.1.2), so the only workable compact form is int8 codes IN THE SCHEMA: a
-# 1-char string element in an UnsafeArrayData struct costs an 8-byte
-# offset+len word plus 8-byte-aligned payload vs 1 byte for a tinyint.
-# Consumers (operators/samples.py) compare through ``kind_lit`` so both
-# encodings stay semantics-identical. Codes are the DEFAULT: the
-# interleaved A/B (BASELINE.md) measured identical output with walls
-# 5.3% lower at 8 cores and 15% at 32 cores on the sf1 input — the gain
-# grows with core count exactly as a shuffle-bandwidth effect should.
-# SPARK_KG_KIND_CODES=0 reverts to letter strings for A/B.
-KIND_CODES = {"w": 0, "t": 1, "e": 2, "f": 3}
-
-
-def kind_codes_enabled() -> bool:
-    return os.environ.get("SPARK_KG_KIND_CODES", "1") != "0"
-
-
-def kind_lit(k: str):
-    """Literal to compare a ``terms.kind`` column element against — int8
-    code or the raw letter, matching the active physical encoding."""
-    return F.lit(KIND_CODES[k]) if kind_codes_enabled() else F.lit(k)
-
-
-def _term_struct(base: StructType) -> StructType:
-    if not kind_codes_enabled():
-        return base
-    return StructType([StructField("kind", ByteType())] + base.fields[1:])
 # term struct when the synonym-group / entity-type lookups ride in the parse
 # closure (EP2 sample serialization): entity terms carry their group key and
 # type so the sample-masking expressions never embed lexicon literals
 # (round-2 verdict item 3 — a create_map literal per lexicon entry inside a
 # per-term transform lambda grows the Catalyst expression tree with the
 # lexicon; the closure dict is O(1) per term and ships once per executor).
+# J7a's sid is trim(lower(value)), and bracket values are already lowercase
+# whitespace-free tokens, so the Python dict lookup is exactly
+# ``with_group_key`` (operators/grouping.py).
 TERM_ANNOT_T = StructType(TERM_T.fields + [
     StructField("group_key", StringType()),
     StructField("ent_type", StringType()),
@@ -113,8 +84,6 @@ PARSE_SCHEMA = StructType([
     StructField("mentions", ArrayType(MENTION_T)),
     StructField("frames", ArrayType(FRAME_T)),
 ])
-PARSE_SCHEMA_FULL = StructType(
-    PARSE_SCHEMA.fields + [StructField("terms", ArrayType(TERM_T))])
 
 _KEY_FIELDS = [StructField("conv_id", StringType()),
                StructField("turn_idx", IntegerType()),
@@ -123,17 +92,12 @@ _KEY_FIELDS = [StructField("conv_id", StringType()),
 
 def _out_schema(with_terms: bool, annotate: bool = False,
                 cased: bool = False) -> StructType:
-    base = PARSE_SCHEMA_FULL if with_terms else PARSE_SCHEMA
-    fields = list(base.fields)
-    if annotate:
-        fields[1] = StructField("mentions", ArrayType(MENTION_ANNOT_T))
-        if with_terms:
-            fields[3] = StructField(
-                "terms", ArrayType(TERM_CASED_T if cased else TERM_ANNOT_T))
+    fields = _KEY_FIELDS + PARSE_SCHEMA.fields
     if with_terms:
-        fields[3] = StructField(
-            "terms", ArrayType(_term_struct(fields[3].dataType.elementType)))
-    return StructType(_KEY_FIELDS + fields)
+        term_t = ((TERM_CASED_T if cased else TERM_ANNOT_T) if annotate
+                  else TERM_T)
+        fields = fields + [StructField("terms", ArrayType(term_t))]
+    return StructType(fields)
 
 
 def _list_array(offsets: list[int], struct: pa.StructArray) -> pa.ListArray:
@@ -149,10 +113,10 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
     closure and shipped once per executor with the serialized task (they are
     KB-sized; for MB-sized lexicons switch to ``SparkContext.broadcast``).
 
-    With ``groups`` (sid -> group key), mention structs additionally carry
-    ``group_key`` (seed hit or open-world ``u:<sid>``) and ``ent_type``
-    (from ``types``, NULL when unknown) — the turn-local pipeline's inlined
-    J7a/J12 lookups.
+    With ``groups`` (sid -> group key) and ``with_terms``, entity term
+    structs additionally carry ``group_key`` (seed hit or open-world
+    ``u:<sid>``) and ``ent_type`` (from ``types``, NULL when unknown) — the
+    inlined J7a/J12 lookups.
 
     ``pos_tagger`` (a dotted ``"module:factory"`` path or the name
     ``"default"``; requires groups + with_terms) additionally annotates
@@ -171,9 +135,6 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
     E, FR = tp.E, tp.F
 
     cased = pos_tagger is not None and with_terms and annotate
-    # decided DRIVER-side so executor batches always match the declared
-    # schema even if executor envs differ
-    kind_codes = KIND_CODES if kind_codes_enabled() else None
 
     def _parse_batches(batches: Iterator[pa.RecordBatch]
                        ) -> Iterator[pa.RecordBatch]:
@@ -197,11 +158,9 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
             texts = b.column(3).to_pylist()
             n_terms: list[int] = []
             m_off, m_pos, m_val = [0], [], []
-            m_grp: list[str | None] = []
-            m_typ: list[str | None] = []
             f_off, f_pos, f_id, f_neg = [0], [], [], []
             t_off: list[int] = [0]
-            t_kind: list[str] = []
+            t_kind: list[int] = []
             t_text: list[str] = []
             t_aux: list[str] = []
             t_grp: list[str | None] = []
@@ -218,13 +177,6 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
                     if k == E:
                         m_pos.append(i)
                         m_val.append(t.text)
-                        if annotate:
-                            sid = t.text.strip()
-                            g = groups.get(sid)
-                            if g is None and register:
-                                g = "u:" + sid
-                            m_grp.append(g)
-                            m_typ.append(types.get(t.text))
                     elif k == FR:
                         f_pos.append(i)
                         f_id.append(t.text)
@@ -233,8 +185,7 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
                 f_off.append(len(f_pos))
                 if with_terms:
                     for t in terms:
-                        t_kind.append(kind_codes[t.kind] if kind_codes
-                                      else t.kind)
+                        t_kind.append(KIND_CODES[t.kind])
                         t_text.append(t.text)
                         t_aux.append(t.aux)
                         if annotate:
@@ -256,15 +207,9 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
                                     t_osuf.append(None)
                                     t_esuf.append(None)
                     t_off.append(len(t_kind))
-            m_children = [pa.array(m_pos, pa.int32()),
-                          pa.array(m_val, pa.string())]
-            m_names = ["pos", "value"]
-            if annotate:
-                m_children += [pa.array(m_grp, pa.string()),
-                               pa.array(m_typ, pa.string())]
-                m_names += ["group_key", "ent_type"]
             mentions = _list_array(m_off, pa.StructArray.from_arrays(
-                m_children, names=m_names))
+                [pa.array(m_pos, pa.int32()), pa.array(m_val, pa.string())],
+                names=["pos", "value"]))
             frames_arr = _list_array(f_off, pa.StructArray.from_arrays(
                 [pa.array(f_pos, pa.int32()), pa.array(f_id, pa.string()),
                  pa.array(f_neg, pa.bool_())],
@@ -274,8 +219,7 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
             names = ["conv_id", "turn_idx", "role", "n_terms", "mentions",
                      "frames"]
             if with_terms:
-                t_children = [pa.array(t_kind, pa.int8() if kind_codes
-                                       else pa.string()),
+                t_children = [pa.array(t_kind, pa.int8()),
                               pa.array(t_text, pa.string()),
                               pa.array(t_aux, pa.string())]
                 t_names = ["kind", "text", "aux"]

@@ -24,11 +24,11 @@ sequential sample ids (``row_ids/base.py:27-39``) become content-derived
 
 Lexicon lookups ride in the PARSE CLOSURE, not in expressions: entity terms
 arrive already annotated with ``group_key``/``ent_type``
-(``parse.make_parse_func`` with groups/types — the same inlined J7a/J12
-lookups the turn-local pipeline uses), and the triple rows carry their
-``s_group``/``t_group``. The earlier formulation embedded the full synonym
-and type lexicons as ``create_map`` literals inside the per-term ``transform``
-lambdas — the Catalyst expression tree grew with the lexicon (the same
+(``parse.make_parse_func`` with groups/types — the inlined J7a/J12
+lookups), and the triple rows carry their ``s_group``/``t_group``. The
+earlier formulation embedded the full synonym and type lexicons as
+``create_map`` literals inside the per-term ``transform`` lambdas — the
+Catalyst expression tree grew with the lexicon (the same
 expression-blowup class measured 10x on shingles); a production synonym
 dictionary (MBs) never belongs in the plan.
 """
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .parse import kind_lit
+from .parse import KIND_CODES
 
 def _default_uint_scale() -> dict[str, int]:
     from ..labels import THREE_CLASS
@@ -121,8 +121,8 @@ def build_samples(triples_pos: DataFrame, parsed_terms: DataFrame,
                 .when(ent_group == s_grp, subj_mask)
                 .when(ent_group == t_grp, obj_mask)
                 .otherwise(other_mask))
-            return (F.when(term["kind"] == kind_lit("e"), ent_mask)
-                    .when(term["kind"] == kind_lit("f"), term["aux"])
+            return (F.when(term["kind"] == KIND_CODES["e"], ent_mask)
+                    .when(term["kind"] == KIND_CODES["f"], term["aux"])
                     .otherwise(term["text"]))
         return mask
 
@@ -153,7 +153,7 @@ def build_samples(triples_pos: DataFrame, parsed_terms: DataFrame,
         post = post.format(subject=subj_ph, object=obj_ph)
         text_b = F.concat(F.lit(pre), ctx, F.lit(post))
 
-    ent_terms = F.filter(terms, lambda x: x["kind"] == kind_lit("e"))
+    ent_terms = F.filter(terms, lambda x: x["kind"] == KIND_CODES["e"])
     entity_values = F.array_join(
         F.transform(ent_terms,
                     lambda x: F.regexp_replace(x["text"], ",", "")), ",")
@@ -163,7 +163,7 @@ def build_samples(triples_pos: DataFrame, parsed_terms: DataFrame,
     # in-sentence indices of entity terms
     idx = F.sequence(F.lit(0), F.size(terms) - 1)
     ent_inds = F.filter(idx, lambda i: F.element_at(terms, i + 1)["kind"]
-                        == kind_lit("e"))
+                        == KIND_CODES["e"])
     entities = F.array_join(F.transform(ent_inds,
                                         lambda i: i.cast("string")), ",")
 

@@ -36,16 +36,6 @@ from .operators.pairs import candidate_pairs, exclude_existed
 from .operators.parse import parse_transcripts
 
 
-def _warn_nondefault_lever(name: str, value: str) -> None:
-    """A/B env levers change the SEMANTICS/plan of registered queries (e.g.
-    SPARK_KG_FRAME_ANNOT=0 drops the J4b labels and fails the hash oracles)
-    — log loudly so a recorded run can never silently carry a lever."""
-    import logging
-    logging.getLogger(__name__).warning(
-        "non-default A/B lever %s=%s — registered kg_* queries may diverge "
-        "from their oracles under this setting", name, value)
-
-
 def _connotation_map(frames_lex: FramesLexicon, cfg) -> dict:
     """J4b label-map selection (cfg.connotation): the reference's a0->a1
     polarity (``try_get_frame_polarity``), or a role's effect labels
@@ -83,47 +73,21 @@ def build_triple_pipeline(spark: SparkSession,
                           cfg: PipelineConfig | None = None,
                           transcripts: DataFrame | None = None,
                           persist: bool = True,
-                          frames_override: FramesLexicon | None = None,
-                          strategy: str = "auto"
+                          frames_override: FramesLexicon | None = None
                           ) -> TriplePipelineResult:
-    """EP1. ``strategy``: 'relational' (codegen self-join plan — the
-    default), 'turnlocal' (array-HOF plan, valid for ``dist_in_sents == 0``),
-    or 'auto' (= relational).
-
-    Why relational is the default: with subset co-partitioning enabled
+    """EP1 as one codegen plan: with subset co-partitioning enabled
     (session.py: ``requireAllClusterKeysForCoPartition=false``) the pair
     self-join and the opinion-expansion join both reuse the single post-parse
-    conv_id hash partitioning, so the relational plan moves the same shuffle
-    bytes as the turn-local one (parse output + doc-opinion agg) while every
-    operator stays inside whole-stage codegen. The turn-local higher-order
-    array functions (transform/filter/flatten lambdas) are CodegenFallback —
-    interpreted evaluation plus one GenericInternalRow allocation per
-    candidate pair — and profiled 5-10x the JVM CPU of the codegen join at
-    identical output (sf1x8, local[32]: 990 vs 170 executor-CPU-seconds for
-    the post-parse stages), with run-to-run variance whenever AQE flips the
-    expansion join between broadcast and sort-merge. Turn-local remains for
-    A/B and for exchange-count-sensitive deployments."""
+    conv_id hash partitioning, and every operator stays inside whole-stage
+    codegen."""
     cfg = cfg or PipelineConfig()
     if transcripts is None:
         transcripts = spark.read.parquet(inputs.transcripts)
 
     frames_lex = (frames_override if frames_override is not None
                   else FramesLexicon.from_json(inputs.frames))
-    seed_syn = load_synonym_seed(inputs.synonyms)
-    seed_df = seed_groups_df(spark, seed_syn)
-
-    if strategy == "auto":
-        strategy = "relational"
-    if strategy == "turnlocal":
-        if cfg.dist_in_sents != 0:
-            raise ValueError("turnlocal strategy requires dist_in_sents == 0")
-        return _build_turnlocal(spark, inputs, cfg, transcripts, persist,
-                                frames_lex, seed_syn, seed_df)
-
-    import os as _os
+    seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
     conn_map = _connotation_map(frames_lex, cfg)
-    frame_annot_live = bool(conn_map) and _os.environ.get(
-        "SPARK_KG_FRAME_ANNOT", "1") != "0"
 
     parsed = parse_transcripts(transcripts, frames_lex, cfg)
     # Materialize the parse output ONCE — but only when the plan fan-out
@@ -146,26 +110,14 @@ def build_triple_pipeline(spark: SparkSession,
     # materialize up front. At real cluster scale the same role is played by
     # writing the parse output to a conv_id-bucketed table (checkpoint
     # blocks are not replicated; lineage is cut deliberately).
-    # SPARK_KG_PARSE_CKPT overrides: 1 forces on, 0 forces off, unset/auto
-    # gates on the frames fan-out.
-    _ckpt_lever = _os.environ.get("SPARK_KG_PARSE_CKPT", "auto")
-    if _ckpt_lever not in ("auto", ""):
-        _warn_nondefault_lever("SPARK_KG_PARSE_CKPT", _ckpt_lever)
-    if _os.environ.get("SPARK_KG_FRAME_ANNOT", "1") == "0":
-        _warn_nondefault_lever("SPARK_KG_FRAME_ANNOT", "0")
-    do_ckpt = (frame_annot_live if _ckpt_lever in ("auto", "")
-               else _ckpt_lever != "0")
-    if do_ckpt:
+    if conn_map:
         # Project role away BEFORE materializing: the checkpoint defeats
         # Catalyst column pruning (it stores every column for all 7
         # consuming branches), and nothing in EP1 past the parse reads
         # role — mentions/frames/pairs/expansion key on (conv_id,
         # turn_idx) only. Without the checkpoint, pruning already removes
-        # it, so the no-ckpt plan needs no change. SPARK_KG_DROP_ROLE=0
-        # reverts for A/B (BASELINE.md).
-        if _os.environ.get("SPARK_KG_DROP_ROLE", "1") != "0":
-            parsed = parsed.drop("role")
-        parsed = parsed.localCheckpoint(eager=persist)
+        # it, so the no-ckpt plan needs no change.
+        parsed = parsed.drop("role").localCheckpoint(eager=persist)
     mentions = with_group_key(mentions_table(parsed), seed_df,
                               register_missed=cfg.register_missed_synonyms)
     if cfg.entity_type_whitelist is not None:
@@ -192,7 +144,7 @@ def build_triple_pipeline(spark: SparkSession,
     # when the lexicon carries no polarities — an empty lexicon would only
     # add a dead parse branch to the plan.
     frame_ops = (frame_doc_opinions(pairs, frames_df, conn_map)
-                 if frame_annot_live else None)
+                 if conn_map else None)
     doc_opinions = union_annotators(predefined, nolabel, frame_ops)
 
     expanded = expand_to_text_opinions(doc_opinions, mentions, cfg)
@@ -202,53 +154,6 @@ def build_triple_pipeline(spark: SparkSession,
     return TriplePipelineResult(
         mentions=mentions,
         frames=frames_df,
-        doc_opinions=doc_opinions,
-        text_opinions=text_opinions,
-        triples=triples,
-    )
-
-
-def _build_turnlocal(spark: SparkSession, inputs: KgInputs,
-                     cfg: PipelineConfig, transcripts: DataFrame,
-                     persist: bool, frames_lex: FramesLexicon,
-                     seed_syn, seed_df: DataFrame) -> TriplePipelineResult:
-    """One-shuffle EP1 (operators/turnlocal.py): the synonym-seed (J7a) and
-    entity-type (J12) lookups ride inside the parse closure; every stage
-    after the single conv_id repartition is exchange-free."""
-    from .operators import turnlocal as tl
-
-    groups = {str(r.sid): f"g{int(r.group_id)}"
-              for r in seed_syn.itertuples()}
-    types = (load_entity_types(inputs.entity_types)
-             if cfg.entity_type_whitelist is not None else None)
-    parsed = parse_transcripts(transcripts, frames_lex, cfg,
-                               groups=groups, types=types)
-    annotated = tl.annotated_parsed(parsed, cfg)
-    # NO caching here, deliberately (persist is accepted for signature
-    # compatibility): the triples DAG reads ``annotated`` twice (pair stage +
-    # expansion stage) and re-running the Arrow parse costs ~40 CPU-s per
-    # million turns, while materializing Spark's columnar cache of the nested
-    # mention arrays measured 5-10x that in allocation/GC CPU at high
-    # parallelism (local[32]) and serialized the concurrent AQE branches on
-    # BlockManager locks. Recompute beats remember for this shape.
-    del persist
-
-    seed_ops = spark.read.parquet(inputs.seed_opinions)
-    predefined = predefined_doc_opinions(seed_ops, seed_df)
-    nolabel = tl.nolabel_doc_opinions_local(annotated, cfg)
-    conn_map = _connotation_map(frames_lex, cfg)
-    frame_ops = (tl.frame_doc_opinions_local(annotated, cfg, conn_map)
-                 if conn_map else None)
-    doc_opinions = union_annotators(predefined, nolabel, frame_ops)
-
-    conv_ms = tl.conv_mentions(annotated)
-    expanded = tl.expand_to_text_opinions_local(doc_opinions, conv_ms, cfg)
-    text_opinions = dedup_across_annotators(expanded)
-    triples = triples_schema_select(text_opinions)
-
-    return TriplePipelineResult(
-        mentions=tl.mentions_rows(annotated),
-        frames=frames_table(parsed),
         doc_opinions=doc_opinions,
         text_opinions=text_opinions,
         triples=triples,
@@ -274,9 +179,9 @@ def build_samples_pipeline(spark: SparkSession, inputs: KgInputs,
                                 frames_override=frames_override)
     frames_lex = (frames_override if frames_override is not None
                   else FramesLexicon.from_json(inputs.frames))
-    # synonym-group / entity-type lookups ride in the parse closure (the
-    # turn-local pipeline's inlined J7a/J12 path) so the sample-masking
-    # expressions carry NO lexicon literals — see operators/samples.py.
+    # synonym-group / entity-type lookups ride in the parse closure so the
+    # sample-masking expressions carry NO lexicon literals — see
+    # operators/samples.py.
     seed = load_synonym_seed(inputs.synonyms)
     seed_groups = {str(r.sid): f"g{int(r.group_id)}"
                    for r in seed.itertuples()}

@@ -123,38 +123,6 @@ def test_frame_effects_registry_shapes(spark, sf0001_dir):
     assert "state" not in kinds_by_frame.get("f_praise", set())
 
 
-def test_effect_annotator_strategy_equivalence(spark, sf0001_dir):
-    """The effect-labeled annotator agrees EXACTLY between the relational
-    plan (codegen pair self-join, the registered query) and the turn-local
-    array-HOF plan — the generic frame_id->label map seam holds for both
-    physical strategies, not just the polarity map."""
-    from arekit_r335_spark.config import PipelineConfig
-    from arekit_r335_spark.lexicons import (FramesLexicon as FL, KgInputs,
-                                            load_synonym_seed)
-    from arekit_r335_spark.operators import turnlocal as tl
-    from arekit_r335_spark.operators.parse import parse_transcripts
-    from arekit_r335_spark.queries import q_kg_doc_opinions_effect
-
-    rel = {(r.conv_id, r.s_group, r.t_group, r.label)
-           for r in q_kg_doc_opinions_effect(spark, sf0001_dir).collect()}
-
-    inputs = KgInputs.at(sf0001_dir)
-    cfg = PipelineConfig()
-    lex = FL.from_json(inputs.frames)
-    seed_syn = load_synonym_seed(inputs.synonyms)
-    groups = {str(r.sid): f"g{int(r.group_id)}"
-              for r in seed_syn.itertuples()}
-    parsed = parse_transcripts(spark.read.parquet(inputs.transcripts),
-                               lex, cfg, groups=groups)
-    annotated = tl.annotated_parsed(parsed, cfg)
-    eff = tl.frame_doc_opinions_local(annotated, cfg,
-                                      lex.role_effect_map("a1"))
-    loc = {(r.conv_id, r.s_group, r.t_group, r.label)
-           for r in eff.select("conv_id", "s_group", "t_group",
-                               "label").collect()}
-    assert rel and loc == rel
-
-
 def test_pipeline_connotation_effect_config(spark, sf0001_dir):
     """cfg.connotation='effect:a1' swaps the J4b label map INSIDE the full
     pipeline (the runner can therefore materialize effect-labeled graphs):

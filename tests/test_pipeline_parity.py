@@ -7,7 +7,6 @@ expected outcome."""
 import os
 
 import pandas as pd
-import pytest
 
 from arekit_r335_spark.config import PipelineConfig
 from arekit_r335_spark.lexicons import FramesLexicon, KgInputs, load_entity_types
@@ -97,43 +96,22 @@ def test_triples_parity_type_whitelist(spark, sf0001_dir):
     assert got == want
 
 
-@pytest.mark.parametrize("cfg", [
-    PipelineConfig(),
-    PipelineConfig(dist_in_terms_bound=10, terms_per_context=10),
-    PipelineConfig(entity_type_whitelist=("GPE", "PERSON", "ORG")),
-    PipelineConfig(register_missed_synonyms=False),
-], ids=["default", "tight-window", "whitelist", "no-register-missed"])
-def test_strategy_equivalence(spark, sf0001_dir, cfg):
-    """The one-shuffle turn-local plan and the general relational self-join
-    plan are alternative physical strategies for the same logical EP1 —
-    identical triples row-for-row, on every config the other parity tests
-    exercise (incl. the turnlocal whitelist folded into the parse closure
-    and the register_missed=False path)."""
+def test_closed_world_synonyms(spark, sf0001_dir):
+    """register_missed_synonyms=False (closed-world J7: a mention outside the
+    synonym seed gets no group and so joins no opinion) yields exactly the
+    default run's triples minus every row touching an open-world ``u:``
+    group."""
     inputs = KgInputs.at(sf0001_dir)
-    a = build_triple_pipeline(spark, inputs, cfg, persist=False,
-                              strategy="turnlocal").triples
-    b = build_triple_pipeline(spark, inputs, cfg, persist=False,
-                              strategy="relational").triples
-    rows_a = {tuple(r) for r in a.collect()}
-    rows_b = {tuple(r) for r in b.collect()}
-    assert rows_a == rows_b and len(rows_a) > 0
-
-
-def test_strategy_equivalence_sf001(spark, sf001_dir):
-    """Strategy equivalence at the LARGER sf0.01 fixture (round-2 verdict
-    item 10): 10x the conversations, real cross-turn synonym collisions and
-    multi-context pairs that the 0.001-scale fixture cannot express — both
-    physical strategies must stay byte-equal on the full triple schema."""
-    inputs = KgInputs.at(sf001_dir)
-    cfg = PipelineConfig()
-    a = build_triple_pipeline(spark, inputs, cfg, persist=False,
-                              strategy="turnlocal").triples
-    b = build_triple_pipeline(spark, inputs, cfg, persist=False,
-                              strategy="relational").triples
-    rows_a = {tuple(r) for r in a.collect()}
-    rows_b = {tuple(r) for r in b.collect()}
-    assert rows_a == rows_b
-    assert len(rows_a) > 1000   # sf0.01 scale really engaged
+    closed = build_triple_pipeline(
+        spark, inputs, PipelineConfig(register_missed_synonyms=False),
+        persist=False).triples.collect()
+    assert closed and all(r.s_group is not None and r.t_group is not None
+                          for r in closed)
+    default = build_triple_pipeline(spark, inputs, PipelineConfig(),
+                                    persist=False).triples
+    want = default.filter(~default.s_group.startswith("u:")
+                          & ~default.t_group.startswith("u:")).collect()
+    assert {tuple(r) for r in closed} == {tuple(r) for r in want}
 
 
 def test_partition_count_invariance(spark, sf0001_dir):

@@ -335,38 +335,37 @@ def test_decode_assets_dispatch(spark):
 
 
 def test_kind_encoding_lever_equivalence(spark, sf0001_dir):
-    """terms.kind ships as int8 codes by default (BASELINE.md A/B: +15% at
-    32 cores on sf1); SPARK_KG_KIND_CODES=0 reverts to letter strings.
-    Both encodings must produce byte-identical samples, and the default
-    schema must actually carry the compact type."""
+    """terms.kind ships as int8 codes (BASELINE.md A/B: +15% at 32 cores on
+    sf1), not letter strings. The schema must carry the compact type, and
+    every code must decode to the letter the Python term parser assigns to
+    the same term."""
+    import pandas as pd
     from pyspark.sql.types import ByteType
 
     from arekit_r335_spark.config import PipelineConfig
     from arekit_r335_spark.lexicons import FramesLexicon
-    from arekit_r335_spark.operators.parse import parse_transcripts
+    from arekit_r335_spark.operators import textproc as tp
+    from arekit_r335_spark.operators.parse import KIND_CODES, parse_transcripts
 
     inputs = KgInputs.at(sf0001_dir)
+    frames = FramesLexicon.from_json(inputs.frames)
+    parsed = parse_transcripts(spark.read.parquet(inputs.transcripts),
+                               frames, PipelineConfig(), with_terms=True)
+    kind_t = parsed.schema["terms"].dataType.elementType["kind"].dataType
+    assert isinstance(kind_t, ByteType)
 
-    def run():
-        df = build_samples_pipeline(spark, inputs)
-        return sorted(map(tuple, df.collect()))
-
-    old = os.environ.get("SPARK_KG_KIND_CODES")
-    try:
-        os.environ["SPARK_KG_KIND_CODES"] = "1"
-        coded = run()
-        frames_lex = FramesLexicon.from_json(inputs.frames)
-        parsed = parse_transcripts(spark.read.parquet(inputs.transcripts),
-                                   frames_lex, PipelineConfig(),
-                                   with_terms=True)
-        kind_t = (parsed.schema["terms"].dataType.elementType["kind"]
-                  .dataType)
-        assert isinstance(kind_t, ByteType)
-        os.environ["SPARK_KG_KIND_CODES"] = "0"
-        letters = run()
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_KG_KIND_CODES", None)
-        else:
-            os.environ["SPARK_KG_KIND_CODES"] = old
-    assert coded == letters and coded
+    letter = {v: k for k, v in KIND_CODES.items()}
+    tr = pd.read_parquet(inputs.transcripts)
+    by_turn = {(r.conv_id, r.turn_idx): r.text for r in tr.itertuples()}
+    neg = frozenset({"not", "no", "never", "без", "не"})
+    rows = (parsed.select("conv_id", "turn_idx", "terms.kind")
+            .orderBy("conv_id", "turn_idx").limit(200).collect())
+    assert rows
+    seen = set()
+    for r in rows:
+        want = [t.kind for t in tp.parse_turn(by_turn[(r.conv_id, r.turn_idx)],
+                                              frames.variants,
+                                              frames.max_variant_len, neg)]
+        assert [letter[k] for k in r.kind] == want
+        seen.update(want)
+    assert {"w", "e"} <= seen

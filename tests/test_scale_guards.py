@@ -8,6 +8,8 @@ single-task or quadratic at 100 TB must never reappear.
   N-vs-4N equivalence invariant (SURVEY.md §4 item 3).
 * row-at-a-time Python UDFs (``F.udf`` / ``@udf``) — the engine's Python
   boundaries are Arrow-batched only.
+* A/B environment-variable levers — one physical plan ships, and measured
+  alternatives live in BASELINE.md.
 """
 
 import os
@@ -17,9 +19,10 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "arekit_r335_spark")
 
 
-def _source_files():
+def _source_files(include_oracle=False):
     for root, _dirs, files in os.walk(PKG):
-        if "__pycache__" in root or os.sep + "oracle" in root:
+        if "__pycache__" in root or (os.sep + "oracle" in root
+                                     and not include_oracle):
             # oracle/ is test-only SQL/transcription, not engine code
             continue
         for f in files:
@@ -27,10 +30,10 @@ def _source_files():
                 yield os.path.join(root, f)
 
 
-def _grep(pattern):
+def _grep(pattern, include_oracle=False):
     hits = []
     rx = re.compile(pattern)
-    for path in _source_files():
+    for path in _source_files(include_oracle):
         with open(path) as fh:
             for i, line in enumerate(fh, 1):
                 if rx.search(line):
@@ -60,6 +63,15 @@ def test_no_monotonically_increasing_id():
 
 def test_no_row_python_udfs():
     assert _grep(r"F\.udf\(|@udf\b|functions\.udf\(") == []
+
+
+def test_no_env_levers():
+    # A/B environment levers belong in a scratch copy of the engine, with
+    # the measurement recorded in BASELINE.md — a lever left in the shipped
+    # package is a setting no caller selects that doubles the configurations
+    # the oracle gate would have to cover. (The prefix is split so a
+    # repo-wide grep for it stays empty.)
+    assert _grep("SPARK" + "_KG_", include_oracle=True) == []
 
 
 def test_corpus_scaled_parameters_grow_with_n():

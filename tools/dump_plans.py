@@ -145,8 +145,8 @@ def main() -> None:
         "What to look for (and what these plans show):\n"
         "* scans are column-pruned (`ReadSchema` lists only used columns) "
         "and filters are pushed (`PushedFilters`);\n"
-        "* kg_triples runs the RELATIONAL strategy (operators/pairs.py, "
-        "expansion.py — the default): with subset co-partitioning "
+        "* kg_triples runs one plan (operators/pairs.py, expansion.py): "
+        "with subset co-partitioning "
         "(`requireAllClusterKeysForCoPartition=false`, session.py) the "
         "candidate self-join on (conv_id, turn_idx), the frame-vote join, "
         "and the group-expansion joins on (conv_id, group) all reuse the "
