@@ -45,9 +45,6 @@ def _default_uint_scale() -> dict[str, int]:
     return THREE_CLASS.uint_map()
 
 
-UINT_SCALE = {"nolabel": 0, "pos": 1, "neg": 2}  # == THREE_CLASS.uint_map()
-
-
 def _term_group(term):
     """Group key of an entity term: the closure-annotated seed hit, or the
     open-world ``u:<value>`` key (J7 register-missed semantics)."""
@@ -68,6 +65,8 @@ def build_samples(triples_pos: DataFrame, parsed_terms: DataFrame,
     s_group/t_group; parsed_terms: (conv_id, turn_idx, terms array) from
     ``parse_transcripts(with_terms=True, groups=..., types=...)`` — entity
     terms must carry the annotated ``group_key``/``ent_type`` fields.
+    ``build_samples_pipeline`` passes the same checkpointed parse its
+    triples were extracted from, so the corpus is parsed once per EP2 run.
 
     Returns the flat sample table with the reference's column set.
 

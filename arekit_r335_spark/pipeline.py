@@ -12,7 +12,10 @@ No custom pipeline framework: each stage is DataFrame -> DataFrame; Catalyst
 owns the physical plan. The parse output is the one intermediate consumed by
 multiple downstream joins — it is localCheckpoint'ed (or written to a
 conv_id-bucketed table at real scale) so the Arrow parse runs exactly once
-over the corpus regardless of plan fan-out.
+over the corpus regardless of plan fan-out. EP1 checkpoints it when the
+frames/J4b branch is live; EP2 (``build_samples_pipeline``) always
+checkpoints ONE terms-bearing parse that feeds both the triple plan
+(``_triples_from_parsed``) and the sample masking join.
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from .operators.grouping import seed_groups_df, with_group_key
 from .operators.mentions import frames_table, mentions_table
 from .operators.opinions import (nolabel_doc_opinions, predefined_doc_opinions,
                                  union_annotators)
-from .operators.pairs import candidate_pairs, exclude_existed
+from .operators.pairs import candidate_pairs
 from .operators.parse import parse_transcripts
 
 
@@ -86,9 +89,6 @@ def build_triple_pipeline(spark: SparkSession,
 
     frames_lex = (frames_override if frames_override is not None
                   else FramesLexicon.from_json(inputs.frames))
-    seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
-    conn_map = _connotation_map(frames_lex, cfg)
-
     parsed = parse_transcripts(transcripts, frames_lex, cfg)
     # Materialize the parse output ONCE — but only when the plan fan-out
     # warrants it. With the frames branch + J4b annotator live, the triples
@@ -110,7 +110,7 @@ def build_triple_pipeline(spark: SparkSession,
     # materialize up front. At real cluster scale the same role is played by
     # writing the parse output to a conv_id-bucketed table (checkpoint
     # blocks are not replicated; lineage is cut deliberately).
-    if conn_map:
+    if _connotation_map(frames_lex, cfg):
         # Project role away BEFORE materializing: the checkpoint defeats
         # Catalyst column pruning (it stores every column for all 7
         # consuming branches), and nothing in EP1 past the parse reads
@@ -118,6 +118,18 @@ def build_triple_pipeline(spark: SparkSession,
         # turn_idx) only. Without the checkpoint, pruning already removes
         # it, so the no-ckpt plan needs no change.
         parsed = parsed.drop("role").localCheckpoint(eager=persist)
+    return _triples_from_parsed(spark, inputs, cfg, parsed, frames_lex)
+
+
+def _triples_from_parsed(spark: SparkSession, inputs: KgInputs,
+                         cfg: PipelineConfig, parsed: DataFrame,
+                         frames_lex: FramesLexicon) -> TriplePipelineResult:
+    """EP1 past the parse. Reads only ``conv_id, turn_idx, n_terms,
+    mentions, frames`` of ``parsed`` — the same values whether or not the
+    parse also emitted (annotated) ``terms``, so EP2 feeds its one terms
+    parse through here unchanged."""
+    seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
+    conn_map = _connotation_map(frames_lex, cfg)
     mentions = with_group_key(mentions_table(parsed), seed_df,
                               register_missed=cfg.register_missed_synonyms)
     if cfg.entity_type_whitelist is not None:
@@ -175,8 +187,6 @@ def build_samples_pipeline(spark: SparkSession, inputs: KgInputs,
     from .operators.samples import build_samples
 
     cfg = cfg or PipelineConfig()
-    res = build_triple_pipeline(spark, inputs, cfg,
-                                frames_override=frames_override)
     frames_lex = (frames_override if frames_override is not None
                   else FramesLexicon.from_json(inputs.frames))
     # synonym-group / entity-type lookups ride in the parse closure so the
@@ -187,17 +197,26 @@ def build_samples_pipeline(spark: SparkSession, inputs: KgInputs,
                    for r in seed.itertuples()}
     if entity_fmt == "ru_cased" and pos_tagger is None:
         pos_tagger = "default"
-    parsed_full = parse_transcripts(spark.read.parquet(inputs.transcripts),
-                                    frames_lex, cfg, with_terms=True,
-                                    groups=seed_groups,
-                                    types=load_entity_types(
-                                        inputs.entity_types),
-                                    pos_tagger=pos_tagger)
+    # ONE Python parse per EP2 run, as in the reference (the sample row
+    # provider reuses EP1's parsed documents): the terms-bearing parse is
+    # materialized once and both the EP1 branches and the masking join read
+    # the checkpoint. A separate masking parse sent the whole corpus to
+    # Python twice (kgbench ep2_samples at sf0.01: parse.passes 2.0 -> 1.0,
+    # cpu_s -15%, BASELINE.md). Unlike the EP1-only no-frames plan, the
+    # checkpoint always pays here: masking is a consumer no EP1 exchange
+    # can serve. role is read by neither side.
+    parsed = parse_transcripts(spark.read.parquet(inputs.transcripts),
+                               frames_lex, cfg, with_terms=True,
+                               groups=seed_groups,
+                               types=load_entity_types(inputs.entity_types),
+                               pos_tagger=pos_tagger
+                               ).drop("role").localCheckpoint(eager=True)
+    res = _triples_from_parsed(spark, inputs, cfg, parsed, frames_lex)
     triples_pos = res.text_opinions.select(
         "conv_id", F.col("s_turn").alias("turn_idx"),
         "s_ent_id", "t_ent_id", "s_group", "t_group", "label",
         "s_pos", "t_pos")
-    return build_samples(triples_pos, parsed_full,
+    return build_samples(triples_pos, parsed,
                          store_labels=store_labels,
                          text_b_template=text_b_template,
                          entity_fmt=entity_fmt)

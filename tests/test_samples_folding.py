@@ -369,3 +369,19 @@ def test_kind_encoding_lever_equivalence(spark, sf0001_dir):
         assert [letter[k] for k in r.kind] == want
         seen.update(want)
     assert {"w", "e"} <= seen
+
+
+def test_samples_parse_once(spark, sf0001_dir):
+    """EP2 parses the corpus once: the terms-bearing parse is checkpointed
+    and every branch — the EP1 triple plan and the masking join — reads the
+    checkpoint, so no Python parse stage is left in the executed plan, with
+    the frames/J4b branch live or not."""
+    from arekit_r335_spark.lexicons import FramesLexicon
+
+    inputs = KgInputs.at(sf0001_dir)
+    for frames in (None, FramesLexicon.empty()):
+        df = build_samples_pipeline(spark, inputs, frames_override=frames)
+        assert df.count() > 0
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" not in plan, plan
+        assert "Scan ExistingRDD" in plan

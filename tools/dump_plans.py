@@ -135,10 +135,13 @@ def main() -> None:
                         + off_formatted[name].strip()[:7000] + "\n```\n")
 
     # runtime evidence: the parse materializes ONCE (localCheckpoint), every
-    # branch reads the checkpoint blocks
+    # branch reads the checkpoint blocks — in EP1 and in EP2
     audit = executed_audit(build_all()[
         "kg_triples (EP1 end-to-end, frames + connotation)"])
     audit_md = "\n".join(f"* {k}: {v}" for k, v in audit.items())
+    samples_audit = executed_audit(registry()["kg_samples"](spark, sf_dir))
+    samples_audit_md = "\n".join(
+        f"* {k}: {v}" for k, v in samples_audit.items())
 
     hdr = (
         "# PLANS — physical-plan audit (generated by tools/dump_plans.py)\n\n"
@@ -158,9 +161,10 @@ def main() -> None:
         "parse branches (per-branch column pruning makes each exchange "
         "subtree non-identical; measured 7 MapInArrow executions without "
         "the checkpoint at sf0.1, 16s vs 4-5s). The low-fan-out NO-frames "
-        "plan skips the checkpoint (round-3 gating: alternating A/B at "
-        "sf1x8/local[8] pinned, ckpt-off 43.3s vs ckpt-on 45.1s best). The "
-        "executed-plan audit below proves the frames fix at runtime;\n"
+        "EP1 plan skips the checkpoint (round-3 gating: alternating A/B at "
+        "sf1x8/local[8] pinned, ckpt-off 43.3s vs ckpt-on 45.1s best). EP2 "
+        "(kg_samples) always checkpoints its one terms-bearing parse. The "
+        "executed-plan audits below prove both at runtime;\n"
         "* kg_samples (EP2) carries NO synonym/type lexicon literals: "
         "entity terms arrive group/type-annotated from the parse closure "
         "(`map_literals` in its summary counts only the KB-sized frame-"
@@ -173,12 +177,20 @@ def main() -> None:
         f"{audit_md}\n\n"
         "`mapinarrow_in_executed_plan=0` + 7 checkpoint scans = the Python "
         "parse ran exactly once (inside the checkpoint materialization "
-        "job); every consuming branch reads the materialized blocks.\n\n")
+        "job); every consuming branch reads the materialized blocks.\n\n"
+        "## EXECUTED-plan audit — kg_samples at sf0.01 (post-action "
+        "adaptive plan)\n\n"
+        f"{samples_audit_md}\n\n"
+        "`mapinarrow_in_executed_plan=0` = the Python parse ran exactly "
+        "once here too: EP2 checkpoints ONE terms-bearing parse, and both "
+        "the EP1 triple branches and the sample-masking join read it "
+        "(pipeline.build_samples_pipeline).\n\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write(hdr + "\n".join(sections))
     print("PLANS.md written")
     print(audit)
+    print(samples_audit)
 
 
 if __name__ == "__main__":
