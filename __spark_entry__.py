@@ -40,5 +40,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from arekit_r335_spark.queries import oracles
+    from arekit_r335_spark.oracle.gate import oracles
     return oracles("/root/testdata/sf0.01")

@@ -22,7 +22,7 @@ graphs is tiny; ``max_iter`` guards pathological chains.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -82,19 +82,20 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     return comp
 
 
-def group_alias_edges(mentions: DataFrame, aliases: DataFrame | None,
+def group_alias_edges(spark: SparkSession, aliases: DataFrame | None,
                       seed_df: DataFrame) -> DataFrame:
-    """Edge list over group keys:
-
-    * every group key is a node (self-edges filtered later);
-    * explicit alias pairs (value_a, value_b) connect the groups the two
-      values resolve to (seed lookup, else the open-world ``u:`` key).
+    """Edge list (src, dst) over group keys: each explicit alias pair
+    (value_a, value_b) connects the groups the two values resolve to (seed
+    lookup, else the open-world ``u:`` key); a pair inside one group is a
+    self-edge, which ``connected_components`` drops. Only groups touched by
+    an alias become nodes; every other group is its own component, which
+    consumers express as ``coalesce(component, group_key)``. No aliases ->
+    no edges.
     """
     from .grouping import with_group_key
 
     if aliases is None:
-        return mentions.sparkSession.createDataFrame(
-            [], "src string, dst string")
+        return spark.createDataFrame([], "src string, dst string")
     a = aliases.withColumn("value", F.lower("value_a"))
     a = with_group_key(a, seed_df, "value", "src")
     a = a.withColumn("value", F.lower("value_b"))
@@ -115,16 +116,24 @@ def canonical_nodes(mentions: DataFrame, components: DataFrame) -> DataFrame:
                  F.count("*").cast("long").alias("n_mentions")))
 
 
-def canonicalize_triples(triples: DataFrame, components: DataFrame) -> DataFrame:
-    """Rewrite triple group keys to canonical component ids (edges table of
-    the graph sink)."""
-    s = components.withColumnRenamed("node", "s_group") \
-                  .withColumnRenamed("component", "s_canon")
-    t = components.withColumnRenamed("node", "t_group") \
-                  .withColumnRenamed("component", "t_canon")
-    out = (triples
-           .join(F.broadcast(s), "s_group", "left")
-           .join(F.broadcast(t), "t_group", "left"))
-    return (out
-            .withColumn("s_canon", F.coalesce("s_canon", "s_group"))
-            .withColumn("t_canon", F.coalesce("t_canon", "t_group")))
+def canonical_edges(comps: DataFrame, doc_opinions: DataFrame) -> DataFrame:
+    """Canonical edge rollup over ANY doc-opinion table (inline pipeline
+    output or the runner's materialized ``opinions`` sink): J9 priority
+    dedup per (conv, s, t), alias-CC re-pointing (dictionary-sized ->
+    broadcast joins), (src, dst, label) aggregate.  ``comps`` is the
+    alias-CC component map (``connected_components`` over
+    ``group_alias_edges``) — identical for every consumer."""
+    w = Window.partitionBy("conv_id", "s_group", "t_group").orderBy("priority")
+    ops = (doc_opinions.withColumn("__rn", F.row_number().over(w))
+           .filter(F.col("__rn") == 1).drop("__rn"))
+    cs = comps.select(F.col("node").alias("s_group"),
+                      F.col("component").alias("s_comp"))
+    ct = comps.select(F.col("node").alias("t_group"),
+                      F.col("component").alias("t_comp"))
+    return (ops.join(F.broadcast(cs), "s_group", "left")
+            .join(F.broadcast(ct), "t_group", "left")
+            .select(F.coalesce("s_comp", F.col("s_group")).alias("src"),
+                    F.coalesce("t_comp", F.col("t_group")).alias("dst"),
+                    "label")
+            .groupBy("src", "dst", "label")
+            .agg(F.count("*").cast("long").alias("n_ops")))

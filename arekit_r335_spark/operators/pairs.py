@@ -7,7 +7,8 @@ directed cross product of a document's entities;
 (``common/opinions/annot/algo/pair_based.py:44-75``) prunes by
 
 * identical mention          (``e1.IdInDocument == e2.IdInDocument``)
-* optional entity-ignore     (type whitelist, J12 analog)
+* optional entity-ignore     (type whitelist, J12 analog; the pipeline
+                               filters mentions before this join)
 * sentence distance          ``s_dist > dist_in_sents`` -> reject (INCLUSIVE)
 * term distance              ``t_dist > dist_in_terms_bound`` -> reject (INCLUSIVE)
 * synonymous opinion already in the doc's existed (predefined) set.
@@ -28,20 +29,16 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 
 
-def _typed(df: DataFrame, whitelist) -> DataFrame:
-    if whitelist is None:
-        return df
-    return df.filter(F.col("ent_type").isin(list(whitelist)))
-
-
 def candidate_pairs(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Directed mention pairs surviving the J3 filters.
 
     mentions must carry: conv_id, turn_idx, ent_id, ind_in_doc, value,
-    group_key [, ent_type].
+    group_key. The entity-type whitelist (J12) is not applied here: the
+    caller filters the mention table once, after ids and positions are
+    assigned (``pipeline._triples_from_parsed``).
     """
-    src = _typed(mentions, cfg.entity_type_whitelist).alias("s")
-    tgt = _typed(mentions, cfg.entity_type_whitelist).alias("t")
+    src = mentions.alias("s")
+    tgt = mentions.alias("t")
 
     if cfg.dist_in_sents == 0:
         cond = (F.col("s.conv_id") == F.col("t.conv_id")) & \

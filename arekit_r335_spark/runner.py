@@ -305,10 +305,7 @@ def finalize_nodes(spark: SparkSession, inputs: KgInputs,
                 "no alias evidence at %s (%s): canonicalization runs on "
                 "seed-group identity only", inputs.aliases,
                 type(e).__name__)
-    comps = connected_components(
-        group_alias_edges(groups.select(F.col("group_key"),
-                                        F.col("canon_value").alias("value")),
-                          aliases, seed_df))
+    comps = connected_components(group_alias_edges(spark, aliases, seed_df))
     nodes = (groups
              .join(comps.withColumnRenamed("node", "group_key"),
                    "group_key", "left")

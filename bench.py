@@ -26,7 +26,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # per-query walls must not share work across queries: the registry's
-# session-scoped pipeline memo (queries._pipeline) would let kg_triples
+# session-scoped memo (queries._memo) would let kg_triples
 # warm kg_samples — correct for the correctness gate, dishonest for timing
 os.environ["AREKIT_QUERY_CACHE"] = "0"
 

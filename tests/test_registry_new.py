@@ -74,10 +74,7 @@ def test_canonical_edges_alias_collapse(spark):
     _, inputs = _kg(spark, sf)
     seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
     aliases = spark.read.parquet(inputs.aliases)
-    comps = connected_components(
-        group_alias_edges(spark.range(0).selectExpr(
-            "'x' AS conv_id", "'x' AS value", "'x' AS group_key"),
-            aliases, seed_df))
+    comps = connected_components(group_alias_edges(spark, aliases, seed_df))
     remapped = {r.node for r in comps.collect()
                 if r.node != r.component}
     edges = q_kg_canonical_edges(spark, sf)

@@ -10,6 +10,8 @@ single-task or quadratic at 100 TB must never reappear.
   boundaries are Arrow-batched only.
 * A/B environment-variable levers — one physical plan ships, and measured
   alternatives live in BASELINE.md.
+* imports of ``oracle/`` — the test-only oracles may read engine code, never
+  the other way round.
 """
 
 import os
@@ -72,6 +74,14 @@ def test_no_env_levers():
     # the oracle gate would have to cover. (The prefix is split so a
     # repo-wide grep for it stays empty.)
     assert _grep("SPARK" + "_KG_", include_oracle=True) == []
+
+
+def test_engine_imports_no_oracle():
+    # dependencies run one way: oracle/ (DuckDB SQL, the pyref transcription,
+    # the gate's SQL table) may import engine constants, and no engine
+    # module imports oracle/ — so importing the engine never loads the
+    # test-only oracle code
+    assert _grep(r"from \.+oracle\b|arekit_r335_spark\.oracle\b") == []
 
 
 def test_corpus_scaled_parameters_grow_with_n():

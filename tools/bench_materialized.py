@@ -71,11 +71,11 @@ def phase_write(sink_dir: str, out_json: str) -> None:
 def phase_read(sink_dir: str, out_json: str) -> None:
     from arekit_r335_spark.datagen import repo_data_dir
     from arekit_r335_spark.lexicons import KgInputs, load_synonym_seed
-    from arekit_r335_spark.operators.canonical import (connected_components,
+    from arekit_r335_spark.operators.canonical import (canonical_edges,
+                                                       connected_components,
                                                        group_alias_edges)
     from arekit_r335_spark.operators.graph import node_degrees, pagerank
     from arekit_r335_spark.operators.grouping import seed_groups_df
-    from arekit_r335_spark.queries import _canonical_edges_from_ops
     from arekit_r335_spark.runner import read_opinions
 
     data_dir = repo_data_dir(SF)
@@ -94,8 +94,8 @@ def phase_read(sink_dir: str, out_json: str) -> None:
         seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
         aliases = spark.read.parquet(inputs.aliases)
         comps = connected_components(
-            group_alias_edges(ops, aliases, seed_df))
-        return _canonical_edges_from_ops(spark, comps, ops)
+            group_alias_edges(spark, aliases, seed_df))
+        return canonical_edges(comps, ops)
 
     ops_rows = read_opinions(spark, sink_dir).count()
     pr_cold, pr_rows = run(lambda: pagerank(edges(), n_iter=5))

@@ -45,11 +45,11 @@ def measure(spark, data_dir: str) -> dict:
     from arekit_r335_spark.config import PipelineConfig
     from arekit_r335_spark.lexicons import FramesLexicon, KgInputs, \
         load_synonym_seed
-    from arekit_r335_spark.operators.canonical import (connected_components,
+    from arekit_r335_spark.operators.canonical import (canonical_edges,
+                                                       connected_components,
                                                        group_alias_edges)
     from arekit_r335_spark.operators.grouping import seed_groups_df
     from arekit_r335_spark.pipeline import build_triple_pipeline
-    from arekit_r335_spark.queries import _canonical_edges_from_ops
 
     inputs = KgInputs.at(data_dir)
 
@@ -70,8 +70,8 @@ def measure(spark, data_dir: str) -> dict:
         seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
         aliases = spark.read.parquet(inputs.aliases)
         comps = connected_components(
-            group_alias_edges(res.doc_opinions, aliases, seed_df))
-        edges = _canonical_edges_from_ops(spark, comps, res.doc_opinions)
+            group_alias_edges(spark, aliases, seed_df))
+        edges = canonical_edges(comps, res.doc_opinions)
         t0 = time.time()
         out["n_edges"] = edges.count()
         out["edges_s"] = round(time.time() - t0, 2)

@@ -80,8 +80,8 @@ def main(only: list[str], json_out: str | None = None) -> int:
     """The Spark session is the serial bottleneck, so the DuckDB oracle +
     compare for query i runs on a consumer thread WHILE the Spark side of
     query i+1 executes (one DuckDB connection, used by the consumer thread
-    only). This overlap plus the registry's session-scoped pipeline memo
-    (queries._pipeline) is what makes the full-registry gate fit a per-round
+    only). This overlap plus the registry's session-scoped memo
+    (queries._memo) is what makes the full-registry gate fit a per-round
     budget: 328s -> ~150s for 71 queries (VERDICT r4 item 1)."""
     import json
     import queue as queue_mod
@@ -90,11 +90,16 @@ def main(only: list[str], json_out: str | None = None) -> int:
     import __spark_entry__ as entrymod
     from arekit_r335_spark.session import get_spark
 
+    qs = entrymod.queries()
+    unknown = sorted(set(only) - set(qs))
+    if unknown:
+        # a typo must not pass the gate by running zero queries
+        print(f"FAIL unknown query keys: {', '.join(unknown)}")
+        return len(unknown)
+    sqls = entrymod.oracle_sql()
+
     spark = get_spark(app_name="oracle-check", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
-
-    qs = entrymod.queries()
-    sqls = entrymod.oracle_sql()
 
     con = duckdb.connect()
     for name in ["region", "nation", "customer", "supplier", "part",
