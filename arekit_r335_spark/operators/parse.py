@@ -302,17 +302,24 @@ def parse_transcripts(transcripts, frames: FramesLexicon, cfg: PipelineConfig,
                          pos_tagger=pos_tagger)
 
     # Distribute the parse stage: a compact parquet scan can yield far fewer
-    # input splits than cores (at real scale the Iceberg table is bucketed by
-    # conv_id and this becomes a no-op repartition to the bucket count).
-    # Hashing by conv_id also pre-aligns the downstream per-conv windows.
-    # The split count is ESTIMATED from file metadata (Spark's own packing
-    # formula over inputFiles + maxPartitionBytes/openCostInBytes) — never
-    # via ``df.rdd.getNumPartitions()``, which forces an RDD conversion node
-    # into the plan (round-2 verdict item 8).
+    # input splits than cores. The repartition carries no count, so AQE
+    # coalescing sizes the Python stage from the actual post-filter shuffle
+    # bytes: every Python task pays ~0.26 CPU-s of fixed cost (pyspark's
+    # per-task setup_spark_files -> importlib.invalidate_caches() plus the
+    # daemon's gc.collect()), far more than the FSM costs per small split,
+    # so one bucket, one micro-batch or the sf0.01 corpus parses in one
+    # task, and sf0.1 in about defaultParallelism tasks (BASELINE.md).
+    # Hashing by conv_id also pre-aligns the downstream per-conv windows;
+    # coalesced hash partitioning still satisfies them. The split count is
+    # ESTIMATED from file metadata (Spark's own packing formula over
+    # inputFiles + maxPartitionBytes/openCostInBytes) — never via
+    # ``df.rdd.getNumPartitions()``, which forces an RDD conversion node
+    # into the plan (round-2 verdict item 8). A scan that already has
+    # ``parallelism`` splits is left as it is.
     spark = transcripts.sparkSession
     parallelism = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if _estimated_scan_splits(transcripts) < parallelism:
-        transcripts = transcripts.repartition(parallelism, "conv_id")
+        transcripts = transcripts.repartition("conv_id")
 
     narrow = transcripts.select("conv_id",
                                 F.col("turn_idx").cast("int").alias("turn_idx"),

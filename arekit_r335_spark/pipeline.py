@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,11 +64,14 @@ class TriplePipelineResult:
 
 def attach_entity_types(mentions: DataFrame, spark: SparkSession,
                         types: dict[str, str]) -> DataFrame:
-    """Broadcast value->type lookup (J12 support); unknown values get NULL."""
+    """Broadcast value->type lookup (J12 support); unknown values get NULL.
+    The lookup is built through Arrow from a pandas frame, so it is a
+    ``LocalRelation`` and runs no Python task."""
     if not types:
         return mentions.withColumn("ent_type", F.lit(None).cast("string"))
     tdf = spark.createDataFrame(
-        [(k, v) for k, v in sorted(types.items())], "value string, ent_type string")
+        pd.DataFrame(sorted(types.items()), columns=["value", "ent_type"]),
+        "value string, ent_type string")
     return mentions.join(F.broadcast(tdf), "value", "left")
 
 

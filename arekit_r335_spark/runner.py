@@ -5,9 +5,11 @@ rule requires checkpoint/resume by conv_id range with per-partition lineage
 and metrics. Realization:
 
 * work unit = conv_id BUCKET: ``pmod(xxhash64(conv_id), num_buckets)`` —
-  content-derived, partition-count-invariant, and identical to an Iceberg
-  ``bucket(conv_id)`` layout at real scale (here plain parquet partitioned by
-  the bucket column stands in for Iceberg, which isn't in the sandbox).
+  content-derived and partition-count-invariant. It is NOT Iceberg's
+  ``bucket(conv_id)`` transform (``(murmur3_x86_32(v) & MAX_INT) % N``), and
+  the transcripts are not stored by it, so no storage layout prunes this
+  filter today: each bucket scans the whole transcript table (ROADMAP item 2).
+  The sink tables are plain parquet partitioned by the bucket column.
 * per bucket: run the triple pipeline on that conv range, dynamic-partition-
   OVERWRITE the edges/nodes partitions (idempotent re-run), then append the
   lineage row LAST — a bucket is "done" only once its lineage row exists, so
@@ -24,8 +26,10 @@ import os
 import time
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .config import PipelineConfig
 from .lexicons import KgInputs
@@ -155,20 +159,37 @@ def completed_buckets(spark: SparkSession, sink: GraphSink,
     if not sink.exists(spark, "lineage"):
         return set()
     lineage = sink.read(spark, "lineage")
-    if num_buckets is not None and "num_buckets" in lineage.columns:
-        seen = [r.num_buckets for r in
-                lineage.select("num_buckets").distinct().collect()
-                if r.num_buckets is not None]
-        bad = [n for n in seen if n != num_buckets]
+    # one job: the lineage table holds a row per bucket run, so both the
+    # bucket-count check and the done set come from one collected pass
+    has_n = "num_buckets" in lineage.columns
+    rows = lineage.select(
+        "bucket", "status",
+        "num_buckets" if has_n else F.lit(None).alias("num_buckets")).collect()
+    if num_buckets is not None:
+        bad = [r.num_buckets for r in rows
+               if r.num_buckets is not None and r.num_buckets != num_buckets]
         if bad:
             raise ValueError(
                 f"sink at {sink.base_dir!r} was materialized with "
                 f"num_buckets={bad[0]}, resume requested num_buckets="
                 f"{num_buckets}; bucket ranges are not comparable — "
                 f"finish with the original count or write a new sink")
-    rows = (lineage.filter(F.col("status") == "done")
-            .select("bucket").distinct().collect())
-    return {r.bucket for r in rows}
+    return {r.bucket for r in rows if r.status == "done"}
+
+
+LINEAGE_DDL = ("bucket int, num_buckets int, status string, n_turns long, "
+               "n_mentions long, n_triples long, n_opinions long, "
+               "n_convs long, n_groups long, wall_sec double")
+
+
+def lineage_row(spark: SparkSession, metrics: dict) -> DataFrame:
+    """One lineage row as a ``LocalRelation``: built through Arrow from a
+    one-row pandas frame, so the append runs no Python task (a list of
+    dicts would build a ``LogicalRDD`` whose scan is a PythonRDD task).
+    Columns are taken from ``metrics`` by name."""
+    schema = StructType.fromDDL(LINEAGE_DDL)
+    return spark.createDataFrame(
+        pd.DataFrame([metrics], columns=schema.names), schema)
 
 
 def run_bucket(spark: SparkSession, inputs: KgInputs, cfg: PipelineConfig,
@@ -243,11 +264,7 @@ def run_bucket(spark: SparkSession, inputs: KgInputs, cfg: PipelineConfig,
     # lineage append LAST — commit point of the bucket; num_buckets rides
     # along so a resume under a DIFFERENT bucket count fails loudly
     # (completed_buckets) instead of silently mispartitioning the work
-    sink.append(spark.createDataFrame(
-        [metrics],
-        "bucket int, num_buckets int, status string, n_turns long, "
-        "n_mentions long, n_triples long, n_opinions long, n_convs long, "
-        "n_groups long, wall_sec double"), "lineage")
+    sink.append(lineage_row(spark, metrics), "lineage")
     return metrics
 
 

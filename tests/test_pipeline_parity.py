@@ -125,3 +125,45 @@ def test_partition_count_invariance(spark, sf0001_dir):
     rows_a = {tuple(r) for r in a.collect()}
     rows_b = {tuple(r) for r in b.collect()}
     assert rows_a == rows_b
+
+
+def test_parse_sized_by_input(spark, sf0001_dir):
+    """The parse repartition carries no count, so AQE coalescing sizes the
+    Python stage from the shuffle bytes: the small fixture parses in fewer
+    tasks than spark.sql.shuffle.partitions, with the same rows as a parse
+    of a 16-way repartitioned input."""
+    from arekit_r335_spark.operators.parse import parse_transcripts
+
+    inputs = KgInputs.at(sf0001_dir)
+    frames = FramesLexicon.from_json(inputs.frames)
+    cfg = PipelineConfig()
+    tr = spark.read.parquet(inputs.transcripts)
+    parsed = parse_transcripts(tr, frames, cfg).localCheckpoint(eager=True)
+    assert parsed.rdd.getNumPartitions() < int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: (r.conv_id, r.turn_idx))
+
+    # checkpointed so the 16-way split reaches the parse: a bare
+    # repartition(16) collapses into the parse's own conv_id repartition
+    ref = parse_transcripts(tr.repartition(16).localCheckpoint(eager=True),
+                            frames, cfg)
+    assert ref.rdd.getNumPartitions() == 16
+    got = rows(parsed)
+    assert got and got == rows(ref)
+
+
+def test_entity_type_lookup_is_local_relation(spark):
+    """The whitelist type table is built through Arrow: a LocalRelation,
+    not a LogicalRDD whose scan would run a Python task."""
+    from pyspark.sql import functions as F
+
+    from arekit_r335_spark.pipeline import attach_entity_types
+
+    mentions = spark.range(3).select(F.col("id").cast("string").alias("value"))
+    typed = attach_entity_types(mentions, spark, {"1": "PER", "2": "ORG"})
+    plan = typed._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert {(r.value, r.ent_type) for r in typed.collect()} == {
+        ("0", None), ("1", "PER"), ("2", "ORG")}

@@ -155,3 +155,21 @@ def test_resume_rejects_changed_bucket_count(spark, sf0001_dir, tmp_path):
     # the original count still resumes cleanly
     rest = run_incremental(spark, inputs, sink, num_buckets=NB)
     assert sorted(m["bucket"] for m in rest) == list(range(1, NB))
+
+
+def test_lineage_row_is_local_relation(spark):
+    """The lineage append builds its row through Arrow: a LocalRelation
+    with the lineage schema, not a LogicalRDD whose scan would run a
+    Python task (and start a second Python daemon on first use)."""
+    from arekit_r335_spark.runner import LINEAGE_DDL, lineage_row
+
+    # keys out of schema order: columns are matched by name
+    metrics = {"wall_sec": 1.25, "status": "done", "bucket": 3,
+               "num_buckets": 8, "n_turns": 10, "n_mentions": 20,
+               "n_triples": 5, "n_opinions": 4, "n_convs": 2,
+               "n_groups": 7}
+    row = lineage_row(spark, metrics)
+    plan = row._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert row.schema == spark.createDataFrame([], LINEAGE_DDL).schema
+    assert row.collect()[0].asDict() == metrics
