@@ -45,10 +45,10 @@ class PipelineConfig:
 
     negation_words: tuple[str, ...] = NEGATION_WORDS
 
-    # T5 lemmatization seam: NAME of a backend registered via
-    # ``operators.textproc.register_lemmatizer`` (resolved lazily per
-    # executor process — Mystem-style subprocess backends never ship through
-    # the task closure). "lower" = the deterministic default normalizer.
+    # T5 lemmatization seam: "lower" (the deterministic default normalizer)
+    # or a dotted "package.module:factory" path, resolved once per executor
+    # process by ``operators.textproc.resolve_plugin`` — Mystem-style
+    # subprocess backends never ship through the task closure.
     lemmatizer: str = "lower"
 
     # J4b connotation source: "polarity" (the reference's a0->a1 frame

@@ -17,7 +17,7 @@ Wire-up (identical to every other backend):
     PipelineConfig(lemmatizer=
         "arekit_r335_spark.functions.extproc:subprocess_lower_factory")
 
-``textproc.get_lemmatizer`` resolves the factory lazily in whichever
+``textproc.resolve_plugin`` resolves the factory lazily in whichever
 process asks and memoizes it per process — so exactly one child per
 executor worker, shipped nothing non-picklable in the task closure.
 """
@@ -38,7 +38,7 @@ class SubprocessLemmatizer:
     """One pipe-driven child per Python worker process.
 
     * spawn on construction (the factory runs once per process via the
-      ``get_lemmatizer`` memo);
+      ``resolve_plugin`` memo);
     * ``__call__`` writes one word, reads one lemma — an in-process
       ``lru``-style dict memo in front keeps the pipe round-trip off the
       Zipfian hot path (same bounded-cache discipline as the tokenizer);

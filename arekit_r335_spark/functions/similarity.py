@@ -37,6 +37,20 @@ def cosine_e5(a, b):
                    * 100000, 0).cast("long")
 
 
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Exact cosine re-rank of (query_id, q_emb, neighbor_id, c_emb)
+    candidates: (query_id, neighbor_id, rank, cos_e5), the ``k`` best by
+    rounded cosine per query, ties broken by neighbor id."""
+    scored = cand.select("query_id", "neighbor_id",
+                         cosine_e5(F.col("q_emb"), F.col("c_emb"))
+                         .alias("cos_e5"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_e5").desc(),
+                                               F.col("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank", "cos_e5"))
+
+
 def knn_bruteforce(embeddings: DataFrame, query_ids: list[int],
                    k: int = 10) -> DataFrame:
     """(query_id, neighbor_id, rank, cos_e5) — exact top-k by rounded cosine,
@@ -46,16 +60,8 @@ def knn_bruteforce(embeddings: DataFrame, query_ids: list[int],
                  F.col("embedding").alias("q_emb")))
     c = embeddings.select(F.col("vec_id").alias("neighbor_id"),
                           F.col("embedding").alias("c_emb"))
-    scored = (F.broadcast(q).crossJoin(c)
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id",
-                      cosine_e5(F.col("q_emb"), F.col("c_emb"))
-                      .alias("cos_e5")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_e5").desc(),
-                                               F.col("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos_e5"))
+    return _top_k(F.broadcast(q).crossJoin(c)
+                  .filter(F.col("query_id") != F.col("neighbor_id")), k)
 
 
 def _srp_bucket(emb, planes: list[list[float]]):
@@ -141,14 +147,7 @@ def knn_ivf(embeddings: DataFrame, query_ids: list[int], k: int = 10,
                                         F.col("embedding").alias("c_emb"),
                                         "list_id"), "list_id")
             .filter(F.col("query_id") != F.col("neighbor_id")))
-    scored = cand.select("query_id", "neighbor_id",
-                         cosine_e5(F.col("q_emb"), F.col("c_emb"))
-                         .alias("cos_e5"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_e5").desc(),
-                                               F.col("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos_e5"))
+    return _top_k(cand, k)
 
 
 def planes_for_corpus(n_rows: int, target_bucket_rows: int = 256) -> int:
@@ -226,11 +225,4 @@ def knn_lsh(embeddings: DataFrame, query_ids: list[int], k: int = 10,
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .select("query_id", "q_emb", "neighbor_id", "c_emb")
             .dropDuplicates(["query_id", "neighbor_id"]))
-    scored = cand.select("query_id", "neighbor_id",
-                         cosine_e5(F.col("q_emb"), F.col("c_emb"))
-                         .alias("cos_e5"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_e5").desc(),
-                                               F.col("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos_e5"))
+    return _top_k(cand, k)

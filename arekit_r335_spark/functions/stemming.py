@@ -165,7 +165,7 @@ def porter_stem(word: str) -> str:
 
 
 def porter_factory():
-    """Factory for the T5 seam (``textproc.get_lemmatizer``): lowercase then
+    """Factory for the T5 seam (``textproc.resolve_plugin``): lowercase then
     stem purely-alphabetic ASCII words; anything else (numbers-in-words,
     non-Latin scripts) just lowercases — the same graceful degradation the
     reference's Mystem wrapper applies to out-of-vocabulary tokens."""

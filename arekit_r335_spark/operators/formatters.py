@@ -64,10 +64,12 @@ _ENTITY_SUFFIX = {
     ACC: ("ь", "и"), INS: ("ью", "ьями"), ABL: ("и", "ях"),
 }
 
-# POS-tagger seam: value -> (case, number) — same lazy per-executor named/
-# dotted-path resolution pattern as textproc's lemmatizer seam. The default
-# mirrors the reference's behavior when the tagger cannot resolve a value:
-# UNKN case and UNKN/Single number (str_rus_cased_fmt.py:69-75).
+# POS-tagger seam: value -> (case, number), resolved by name once per
+# process through the same resolver as the lemmatizer
+# (``textproc.resolve_plugin``: "default" or a dotted "module:factory").
+# The default mirrors the reference's behavior when the tagger cannot
+# resolve a value: UNKN case and UNKN/Single number
+# (str_rus_cased_fmt.py:69-75).
 PosTagger = Callable[[str], tuple[int, int]]
 
 

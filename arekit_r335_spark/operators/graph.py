@@ -110,13 +110,23 @@ def triangles(und: DataFrame) -> DataFrame:
     apex) and is produced exactly once by the wedge self-join + closing
     left-semi join.  Returns (a, b, c) with a < b < c lexicographically.
     """
-    und = (und.select(F.least("u", "v").alias("u"),
-                      F.greatest("u", "v").alias("v"))
-           .filter(F.col("u") != F.col("v"))
-           .distinct()
-           # referenced twice for degrees + once per join side: cut the
-           # plan here so the (possibly deep) edge derivation runs once
-           .localCheckpoint(eager=False))
+    return _simple_triangles(_simple(und))
+
+
+def _simple(und: DataFrame) -> DataFrame:
+    """Normalize (u, v) rows to an undirected simple graph: u < v, no
+    self-loops, no duplicates.  Referenced for degrees and by every join
+    side downstream: cut the plan here so the (possibly deep) edge
+    derivation runs once."""
+    return (und.select(F.least("u", "v").alias("u"),
+                       F.greatest("u", "v").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint(eager=False))
+
+
+def _simple_triangles(und: DataFrame) -> DataFrame:
+    """:func:`triangles` over an already-normalized (``_simple``) graph."""
     deg = (und.select(F.col("u").alias("node"))
            .unionAll(und.select(F.col("v").alias("node")))
            .groupBy("node").agg(F.count("*").alias("deg")))
@@ -151,7 +161,8 @@ def triangles(und: DataFrame) -> DataFrame:
 
 def pagerank(edges: DataFrame, n_iter: int = 5,
              damping: float = 0.85,
-             weight_col: str | None = None) -> DataFrame:
+             weight_col: str | None = None,
+             seeds: DataFrame | None = None) -> DataFrame:
     """Fixed-iteration PageRank over the directed canonical edge table.
 
     Iterative shape (same discipline as ``canonical.connected_components``):
@@ -159,8 +170,8 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     distinct edge list, a map-side-combinable sum per destination, and one
     eager ``localCheckpoint`` that cuts lineage so the plan stays constant
     size across iterations.  Dangling mass (rank sitting on nodes with no
-    out-edges) is redistributed uniformly each iteration via a one-row
-    broadcast cross join — no per-iteration driver action.
+    out-edges) is redistributed by the teleport vector each iteration via
+    a one-row broadcast cross join — no per-iteration driver action.
 
     With ``weight_col`` (e.g. ``n_ops``) the walk is weighted: each edge
     carries w = sum(weight_col) over its duplicate rows and a node's rank
@@ -168,9 +179,18 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     is the unweighted walk (w = 1 per distinct edge), numerically identical
     to rank/out-degree.
 
-    The single driver-side action is ``nodes.count()`` for N (a scalar
-    needed inside the update literal), taken once on the checkpointed node
-    list.  Output: (node, rank) with sum(rank) == 1 up to float noise.
+    The update is rank = (1-d)*t + d*(m + dm*t) with teleport weight t.
+    Uniform (``seeds=None``): t is the literal 1/N, so the rank vector
+    carries no extra column.  Personalized (``seeds``, a DataFrame with a
+    ``node`` column): t is 1/|seeds| on seed nodes and 0 elsewhere, riding
+    along the rank vector like the out-strength does, so scores measure
+    walk-proximity to the seed set; restart AND dangling mass both return
+    to the seeds, nodes unreachable from them keep rank exactly 0.
+
+    The single driver-side action is one ``count()`` — of the checkpointed
+    node list (uniform) or of the dictionary-sized seed set — for the
+    scalar inside the teleport literal.  Output: (node, rank) with
+    sum(rank) == 1 up to float noise (whenever every seed is a node).
     """
     if weight_col is None:
         ed = (edges.select("src", "dst").distinct()
@@ -181,15 +201,26 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     ed = ed.localCheckpoint(eager=False)
     nodes = (ed.select(F.col("src").alias("node"))
              .unionAll(ed.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    n = nodes.count()
+             .distinct())
+    if seeds is None:
+        nodes = nodes.localCheckpoint(eager=True)
+        t = F.lit(1.0 / nodes.count())
+        keep = ["node", "od"]
+    else:
+        s = seeds.select("node").distinct().localCheckpoint(eager=True)
+        share = 1.0 / s.count()
+        nodes = (nodes.join(s.withColumn("__seed", F.lit(True)), "node",
+                            "left")
+                 .select("node", F.when(F.col("__seed"), F.lit(share))
+                         .otherwise(F.lit(0.0)).alias("t")))
+        t = F.col("t")
+        keep = ["node", "od", "t"]
     od = ed.groupBy(F.col("src").alias("node")).agg(
         F.sum("w").alias("od"))
     # out-strength rides along with the rank vector so the per-iteration
     # join against the edge list is the only shuffle that scales with |E|
     ranks = (nodes.join(od, "node", "left")
-             .select("node", "od", F.lit(1.0 / n).alias("rank"))
+             .select(*keep, t.alias("rank"))
              .localCheckpoint(eager=True))
     for _ in range(n_iter):
         dang = ranks.filter(F.col("od").isNull()).agg(
@@ -198,69 +229,13 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
                    .groupBy(F.col("dst").alias("node"))
                    .agg(F.sum(F.col("rank") * F.col("w")
                               / F.col("od")).alias("m")))
-        ranks = (ranks.select("node", "od")
+        ranks = (ranks.select(*keep)
                  .join(contrib, "node", "left")
                  .crossJoin(F.broadcast(dang))
-                 .select("node", "od",
-                         (F.lit((1.0 - damping) / n) + F.lit(damping)
+                 .select(*keep,
+                         (F.lit(1.0 - damping) * t + F.lit(damping)
                           * (F.coalesce("m", F.lit(0.0))
-                             + F.col("dm") / F.lit(float(n))))
-                         .alias("rank"))
-                 .localCheckpoint(eager=True))
-    return ranks.select("node", "rank")
-
-
-def pagerank_personalized(edges: DataFrame, seeds: DataFrame,
-                          n_iter: int = 5, damping: float = 0.85,
-                          weight_col: str | None = None) -> DataFrame:
-    """Personalized PageRank: the teleport vector is concentrated on
-    ``seeds`` (a DataFrame with a ``node`` column) instead of uniform, so
-    scores measure walk-proximity to the seed set — entity-centric
-    relevance over the canonical KG.  Restart AND dangling mass both
-    return to the seeds; nodes unreachable from them keep rank exactly 0,
-    and sum(rank) == 1 whenever every seed is a graph node.
-
-    Same iterative discipline as :func:`pagerank` (one |E|-join +
-    combinable sum + eager ``localCheckpoint`` per iteration, constant
-    plan size); the teleport weight ``t`` rides along the rank vector
-    like the out-strength does, so no extra per-iteration join.  Driver
-    actions: one ``count()`` of the (dictionary-sized) seed set."""
-    if weight_col is None:
-        ed = (edges.select("src", "dst").distinct()
-              .select("src", "dst", F.lit(1.0).alias("w")))
-    else:
-        ed = (edges.groupBy("src", "dst")
-              .agg(F.sum(weight_col).cast("double").alias("w")))
-    ed = ed.localCheckpoint(eager=False)
-    nodes = (ed.select(F.col("src").alias("node"))
-             .unionAll(ed.select(F.col("dst").alias("node")))
-             .distinct())
-    s = seeds.select("node").distinct().localCheckpoint(eager=True)
-    ns = s.count()
-    od = ed.groupBy(F.col("src").alias("node")).agg(
-        F.sum("w").alias("od"))
-    ranks = (nodes.join(s.withColumn("__seed", F.lit(True)), "node", "left")
-             .select("node",
-                     F.when(F.col("__seed"), F.lit(1.0 / ns))
-                     .otherwise(F.lit(0.0)).alias("t"))
-             .join(od, "node", "left")
-             .select("node", "od", "t", F.col("t").alias("rank"))
-             .localCheckpoint(eager=True))
-    for _ in range(n_iter):
-        dang = ranks.filter(F.col("od").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        contrib = (ed.join(ranks.withColumnRenamed("node", "src"), "src")
-                   .groupBy(F.col("dst").alias("node"))
-                   .agg(F.sum(F.col("rank") * F.col("w")
-                              / F.col("od")).alias("m")))
-        ranks = (ranks.select("node", "od", "t")
-                 .join(contrib, "node", "left")
-                 .crossJoin(F.broadcast(dang))
-                 .select("node", "od", "t",
-                         (F.lit(1.0 - damping) * F.col("t")
-                          + F.lit(damping)
-                          * (F.coalesce("m", F.lit(0.0))
-                             + F.col("dm") * F.col("t")))
+                             + F.col("dm") * t))
                          .alias("rank"))
                  .localCheckpoint(eager=True))
     return ranks.select("node", "rank")
@@ -383,15 +358,11 @@ def node_triangle_profile(und: DataFrame) -> DataFrame:
     edge list; triangle counts reuse the degree-ordered wedge enumeration
     (O(sqrt(m)) fan-out per vertex) and explode each triangle into its 3
     corners — a 3x map, then a combinable count."""
-    und = (und.select(F.least("u", "v").alias("u"),
-                      F.greatest("u", "v").alias("v"))
-           .filter(F.col("u") != F.col("v"))
-           .distinct()
-           .localCheckpoint(eager=False))
+    und = _simple(und)
     deg = (und.select(F.col("u").alias("node"))
            .unionAll(und.select(F.col("v").alias("node")))
            .groupBy("node").agg(F.count("*").cast("long").alias("degree")))
-    corners = triangles(und).select(
+    corners = _simple_triangles(und).select(
         F.explode(F.array("a", "b", "c")).alias("node"))
     tcnt = corners.groupBy("node").agg(
         F.count("*").cast("long").alias("n_tri"))

@@ -121,13 +121,13 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
     ``pos_tagger`` (a dotted ``"module:factory"`` path or the name
     ``"default"``; requires groups + with_terms) additionally annotates
     entity terms with the RU cased formatter's declension suffixes
-    (``formatters.cased_suffixes``) — resolved lazily PER EXECUTOR like the
-    lemmatizer seam, so Mystem-style external-process taggers never enter
-    the task closure."""
+    (``formatters.cased_suffixes``). Both plug-ins go through
+    ``textproc.resolve_plugin``: built once per Python worker, so
+    Mystem-style external-process backends never enter the task closure."""
     variants = dict(frames.variants)
     max_len = frames.max_variant_len
     first_tokens = tp.first_token_index(variants)
-    lemmatizer_name = getattr(cfg, "lemmatizer", "lower")
+    lemmatizer_name = cfg.lemmatizer
     neg = frozenset(w.lower() for w in cfg.negation_words)
     annotate = groups is not None
     register = cfg.register_missed_synonyms
@@ -138,21 +138,15 @@ def make_parse_func(frames: FramesLexicon, cfg: PipelineConfig,
 
     def _parse_batches(batches: Iterator[pa.RecordBatch]
                        ) -> Iterator[pa.RecordBatch]:
-        # lemmatizer resolved lazily PER EXECUTOR (the closure ships only
-        # the name; non-picklable backends build here on first batch);
-        # "lower" keeps the inline fast path inside scan_frames
+        # plug-ins resolved lazily and once PER PROCESS (the closure ships
+        # only their names); "lower" keeps the inline fast path inside
+        # scan_frames
         lemma_fn = (None if lemmatizer_name == "lower"
-                    else tp.get_lemmatizer(lemmatizer_name))
+                    else tp.resolve_plugin(lemmatizer_name))
         suffix_fn = None
         if cased:
-            from ..operators.formatters import (cased_suffixes,
-                                                default_pos_tagger)
-            if pos_tagger == "default":
-                tagger = default_pos_tagger
-            else:
-                import importlib
-                mod, attr = pos_tagger.split(":", 1)
-                tagger = getattr(importlib.import_module(mod), attr)()
+            from .formatters import cased_suffixes
+            tagger = tp.resolve_plugin(pos_tagger)
             suffix_fn = lambda v: cased_suffixes(v, tagger)  # noqa: E731
         for b in batches:
             texts = b.column(3).to_pylist()

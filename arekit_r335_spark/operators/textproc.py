@@ -157,7 +157,8 @@ def scan_frames(terms: list[Term], variants: dict[str, str],
     ``first_tokens`` is the precomputed first-token set of the lexicon
     (``first_token_index``) — pass it in from the caller that owns the
     lexicon; recomputed here only as a fallback. ``lemma_fn`` is the T5
-    lemmatization seam (default: lowercase normalizer; see ``lemmatizers``).
+    lemmatization seam (default: lowercase normalizer; see
+    ``resolve_plugin``).
     """
     if not variants or max_variant_len < 2:
         return terms
@@ -225,41 +226,41 @@ def first_token_index(variants: dict[str, str]) -> frozenset[str]:
     return frozenset(v.split(" ", 1)[0] for v in variants)
 
 
-# ----------------------------------------------------- lemmatizer seam (T5)
+# ---------------------------------------------------- plug-in seam (T5)
 # The reference's ``LemmasBasedFrameVariantsParser`` delegates to a Stemmer
 # (``common/text/stemmer.py:1-16``; Mystem backend
 # ``contrib/utils/processing/lemmatization/mystem.py:6-51`` — an external
-# process, "significantly slow" per the reference's own note). The engine
-# keeps the same seam: a NAMED backend resolved lazily PER EXECUTOR PROCESS
-# (the name ships in the task closure, the possibly non-picklable backend
-# object never does), defaulting to the deterministic lowercase normalizer.
+# process, "significantly slow" per the reference's own note), and its
+# cased formatter to a POS tagger over the same process. The engine keeps
+# one seam for both per-executor plug-ins: a NAMED backend resolved lazily
+# and memoized PER PROCESS (the name ships in the task closure, the
+# possibly non-picklable backend object never does).
 
-_LEMMATIZER_FACTORIES: dict = {"lower": lambda: str.lower}
-_LEMMATIZER_CACHE: dict = {}
-
-
-def register_lemmatizer(name: str, factory) -> None:
-    """Register a lemmatizer backend: ``factory() -> (str -> str)``. The
-    factory runs once per executor process on first use."""
-    _LEMMATIZER_FACTORIES[name] = factory
+_PLUGINS: dict = {}
 
 
-def get_lemmatizer(name: str):
-    """Resolve a backend by name. Driver-side ``register_lemmatizer`` calls
-    do NOT reach executor processes, so cluster deployments use the dotted
-    form ``"package.module:factory"`` — imported lazily in whichever process
-    asks (the module ships via --py-files like any code)."""
-    fn = _LEMMATIZER_CACHE.get(name)
+def resolve_plugin(name: str):
+    """The plug-in called ``name``: the built-in lemmatizer ``"lower"``
+    (the deterministic lowercase normalizer), the built-in POS tagger
+    ``"default"`` (``formatters.default_pos_tagger``), or a dotted
+    ``"package.module:factory"`` path whose ``factory()`` runs once per
+    process, imported in whichever process asks (the module ships via
+    --py-files like any code). A driver-side registry would never reach
+    the Python workers Spark launches, so there is none."""
+    fn = _PLUGINS.get(name)
     if fn is None:
-        factory = _LEMMATIZER_FACTORIES.get(name)
-        if factory is None and ":" in name:
+        if name == "lower":
+            fn = str.lower
+        elif name == "default":
+            from .formatters import default_pos_tagger
+            fn = default_pos_tagger
+        elif ":" in name:
             import importlib
             mod, attr = name.split(":", 1)
-            factory = getattr(importlib.import_module(mod), attr)
-        if factory is None:
-            raise KeyError(f"unknown lemmatizer backend: {name!r}")
-        fn = factory()
-        _LEMMATIZER_CACHE[name] = fn
+            fn = getattr(importlib.import_module(mod), attr)()
+        else:
+            raise KeyError(f"unknown plug-in: {name!r}")
+        _PLUGINS[name] = fn
     return fn
 
 

@@ -22,9 +22,7 @@ from pyspark.sql import functions as F
 from .config import PipelineConfig
 from .datagen import repo_data_dir
 from .lexicons import FramesLexicon, KgInputs, load_synonym_seed
-from .operators.canonical import (canonical_edges, connected_components,
-                                  group_alias_edges)
-from .operators.grouping import seed_groups_df
+from .operators.canonical import alias_components, canonical_edges
 from .operators.parse import parse_transcripts
 from .pipeline import TriplePipelineResult, build_triple_pipeline
 
@@ -94,19 +92,12 @@ def _noframes_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _comps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alias-CC component map, memoized per session: ``group_alias_edges``
-    derives its edge list from the alias + synonym-seed dictionaries alone,
-    so the component map is IDENTICAL for every consumer (canonical nodes,
-    canonical edges, co-occurrence, timelines, salience) and dictionary-
-    sized — broadcast at every join site."""
-    def build():
-        _, inputs = _kg(spark, sf_dir)
-        seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
-        aliases = spark.read.parquet(inputs.aliases)
-        return connected_components(
-            group_alias_edges(spark, aliases, seed_df))
-
-    return _memo(spark, sf_dir, "comps", build)
+    """Alias-CC component map (``canonical.alias_components``), memoized
+    per session: it derives from the alias + synonym-seed dictionaries
+    alone, so it is IDENTICAL for every consumer (canonical nodes,
+    canonical edges, co-occurrence, timelines, salience)."""
+    return _memo(spark, sf_dir, "comps",
+                 lambda: alias_components(spark, _kg(spark, sf_dir)[1]))
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1258,9 +1249,9 @@ def q_kg_pagerank_personalized(spark, sf_dir):
     entity by walk-proximity to the KG's hub entities; unreachable nodes
     score exactly 0.  Oracle: the t-form update unrolled per generation
     with repr-exact damping literals."""
-    from .operators.graph import pagerank_personalized
+    from .operators.graph import pagerank
     edges = q_kg_canonical_edges(spark, sf_dir)
-    return pagerank_personalized(edges, _hub_seeds(edges), n_iter=5)
+    return pagerank(edges, n_iter=5, seeds=_hub_seeds(edges))
 
 
 def q_doc_negative_pairs(spark, sf_dir):

@@ -21,7 +21,6 @@ and metrics. Realization:
 
 from __future__ import annotations
 
-import logging
 import os
 import time
 from dataclasses import dataclass
@@ -110,10 +109,11 @@ class GraphSink:
                 return
             df.writeTo(self.path(name)).overwritePartitions()
             return
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (df.write.mode("overwrite").partitionBy(partition_col)
-         .parquet(self.path(name)))
+        # per-write option: a session conf would turn every later
+        # partitioned overwrite in the session dynamic too
+        (df.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(partition_col).parquet(self.path(name)))
 
     def write_overwrite(self, df: DataFrame, name: str) -> None:
         if self.fmt == "iceberg":
@@ -298,9 +298,7 @@ def finalize_nodes(spark: SparkSession, inputs: KgInputs,
 
     Idempotent — safe to re-run after any number of incremental buckets.
     """
-    from .lexicons import load_synonym_seed
-    from .operators.canonical import connected_components, group_alias_edges
-    from .operators.grouping import seed_groups_df
+    from .operators.canonical import alias_components
 
     sink = GraphSink(sink_dir, fmt)
     partials = sink.read(spark, "nodes_partial")
@@ -308,21 +306,7 @@ def finalize_nodes(spark: SparkSession, inputs: KgInputs,
               .agg(F.min("canon_value").alias("canon_value"),
                    F.sum("n_mentions").cast("long").alias("n_mentions")))
 
-    seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
-    # Existence must be checked through Spark, not os.path: the aliases path
-    # may be remote (s3://, hdfs://) where os.path.exists is always False —
-    # which would silently run CC with zero edges and leave the node table
-    # unmerged on cluster runs (ADVICE r1).
-    aliases = None
-    if inputs.aliases:
-        try:
-            aliases = spark.read.parquet(inputs.aliases)
-        except Exception as e:  # AnalysisException: PATH_NOT_FOUND
-            logging.getLogger(__name__).warning(
-                "no alias evidence at %s (%s): canonicalization runs on "
-                "seed-group identity only", inputs.aliases,
-                type(e).__name__)
-    comps = connected_components(group_alias_edges(spark, aliases, seed_df))
+    comps = alias_components(spark, inputs)
     nodes = (groups
              .join(comps.withColumnRenamed("node", "group_key"),
                    "group_key", "left")

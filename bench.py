@@ -350,28 +350,9 @@ def main() -> None:
         }
         with open(os.path.join(REPO, "BENCH_SCALING.json"), "w") as f:
             json.dump(scaling_out, f, indent=1)
-        out["scaling"] = scaling_out
 
-    # Materialized-analytics split (VERDICT r4 item 3): sink-write wall vs
-    # analytics-read wall at sf1x8, recorded by tools/bench_materialized.py
-    # (too heavy to re-run per bench invocation — the write phase alone is
-    # ~2 min at local[8]); embedded so the per-round BENCH snapshot carries
-    # the two-step deployment-shape numbers.
-    mat_path = os.path.join(REPO, "BENCH_MATERIALIZED.json")
-    if os.path.exists(mat_path):
-        with open(mat_path) as f:
-            out["materialized"] = json.load(f)
-
-    # Same embedding for the other round-5 at-scale evidence (planted-skew
-    # stress, streaming kill/resume) — recorded by their tools/bench_*.py
-    # scripts, too heavy to re-run per invocation.
-    for key, fname in (("skew", "BENCH_SKEW.json"),
-                       ("stream_resume", "BENCH_STREAM_RESUME.json")):
-        p = os.path.join(REPO, fname)
-        if os.path.exists(p):
-            with open(p) as f:
-                out[key] = json.load(f)
-
+    # the headline only: the scaling, materialized, skew and stream-resume
+    # evidence lives in its own BENCH_*.json (tools/bench_*.py)
     print(json.dumps(out))
 
 

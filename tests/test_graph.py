@@ -214,8 +214,9 @@ def test_pagerank_weighted_matches_reference(spark):
 
 def test_pagerank_personalized_matches_reference(spark):
     """Teleport concentrated on one seed: matches the t-form power
-    iteration, unreachable nodes score exactly 0, mass sums to 1."""
-    from arekit_r335_spark.operators.graph import pagerank_personalized
+    iteration, unreachable nodes score exactly 0, mass sums to 1; seeding
+    every node is the uniform walk."""
+    from arekit_r335_spark.operators.graph import pagerank
     # a -> b -> c (c dangling); isolated pair x -> y unreachable from a
     e = [("a", "b"), ("b", "c"), ("x", "y")]
     df = spark.createDataFrame(e, "src string, dst string")
@@ -237,13 +238,20 @@ def test_pagerank_personalized_matches_reference(spark):
         r = {v: (1 - d) * tele[v] + d * (nxt[v] + dang * tele[v])
              for v in nodes}
 
-    got = {x.node: x.rank for x in
-           pagerank_personalized(df, seeds).collect()}
+    got = {x.node: x.rank for x in pagerank(df, seeds=seeds).collect()}
     assert set(got) == set(r)
     for v in r:
         assert abs(got[v] - r[v]) < 1e-12, v
     assert got["x"] == 0.0 and got["y"] == 0.0
     assert abs(sum(got.values()) - 1.0) < 1e-9
+
+    every = spark.createDataFrame([(v,) for v in nodes], "node string")
+    uni = {x.node: x.rank for x in pagerank(df).collect()}
+    all_seeded = {x.node: x.rank
+                  for x in pagerank(df, seeds=every).collect()}
+    assert set(uni) == set(all_seeded)
+    for v in uni:
+        assert abs(uni[v] - all_seeded[v]) < 1e-12, v
 
 
 def _neg_expect(e, B, K, probes):

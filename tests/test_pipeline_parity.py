@@ -115,16 +115,24 @@ def test_closed_world_synonyms(spark, sf0001_dir):
 
 
 def test_partition_count_invariance(spark, sf0001_dir):
-    """Same triples regardless of input partitioning (SURVEY.md §4 item 3)."""
+    """Same triples regardless of input partitioning (SURVEY.md §4 item 3).
+    Each input is checkpointed so its partition count reaches the parse: a
+    bare repartition(n) collapses into the parse's own conv_id
+    repartition, and both sides would run one plan."""
+    from arekit_r335_spark.operators.parse import parse_transcripts
+
     inputs = KgInputs.at(sf0001_dir)
+    frames = FramesLexicon.from_json(inputs.frames)
     tr = spark.read.parquet(inputs.transcripts)
-    a = build_triple_pipeline(spark, inputs, transcripts=tr.repartition(1),
-                              persist=False).triples
-    b = build_triple_pipeline(spark, inputs, transcripts=tr.repartition(16),
-                              persist=False).triples
-    rows_a = {tuple(r) for r in a.collect()}
-    rows_b = {tuple(r) for r in b.collect()}
-    assert rows_a == rows_b
+    triples = []
+    for n in (1, 16):
+        part = tr.repartition(n).localCheckpoint(eager=True)
+        assert parse_transcripts(part, frames, PipelineConfig()) \
+            .rdd.getNumPartitions() == n
+        res = build_triple_pipeline(spark, inputs, transcripts=part,
+                                    persist=False)
+        triples.append({tuple(r) for r in res.triples.collect()})
+    assert triples[0] and triples[0] == triples[1]
 
 
 def test_parse_sized_by_input(spark, sf0001_dir):

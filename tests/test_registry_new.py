@@ -66,15 +66,10 @@ def test_canonical_edges_alias_collapse(spark):
     the component map covers."""
     from arekit_r335_spark.queries import q_kg_canonical_edges
     from arekit_r335_spark.queries import _kg
-    from arekit_r335_spark.operators.canonical import (connected_components,
-                                                       group_alias_edges)
-    from arekit_r335_spark.operators.grouping import seed_groups_df
-    from arekit_r335_spark.lexicons import load_synonym_seed
+    from arekit_r335_spark.operators.canonical import alias_components
     sf = "/root/testdata/sf0.001"
     _, inputs = _kg(spark, sf)
-    seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
-    aliases = spark.read.parquet(inputs.aliases)
-    comps = connected_components(group_alias_edges(spark, aliases, seed_df))
+    comps = alias_components(spark, inputs)
     remapped = {r.node for r in comps.collect()
                 if r.node != r.component}
     edges = q_kg_canonical_edges(spark, sf)

@@ -73,6 +73,22 @@ def test_rerun_is_noop(spark, sf0001_dir, tmp_path):
     assert again == []
 
 
+def test_incremental_leaves_session_conf(spark, sf0001_dir, tmp_path):
+    """The sink's dynamic partition overwrite is a per-write option:
+    run_incremental leaves the session's partitionOverwriteMode as it
+    found it, so later partitioned overwrites keep their static meaning."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        run_incremental(spark, KgInputs.at(sf0001_dir),
+                        str(tmp_path / "sink"), num_buckets=2,
+                        max_buckets=1)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_lineage_metrics(spark, sf0001_dir, tmp_path):
     inputs = KgInputs.at(sf0001_dir)
     sink = str(tmp_path / "sink")

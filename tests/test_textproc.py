@@ -104,8 +104,7 @@ def test_lemmatizer_seam():
     """T5 seam: a custom backend changes which surface forms hit the frame
     lexicon; the default (lower) seam stays byte-identical to the pyref
     transcription (covered by the parity suite)."""
-    tp.register_lemmatizer("strip_ing", _make_strip_ing)
-    fn = tp.get_lemmatizer("strip_ing")
+    fn = _make_strip_ing()
     terms = tp.tokenize_turn("they are Attacking the base")
     hits = tp.scan_frames(terms, {"attack": "f_attack"}, 3,
                           frozenset({"not"}), lemma_fn=fn)
@@ -118,9 +117,10 @@ def test_lemmatizer_seam():
 
 def test_lemmatizer_dotted_path_resolution():
     """Cluster form: "module:factory" resolves by import in whichever
-    process asks (executors never see driver-side register calls)."""
-    fn = tp.get_lemmatizer("tests.test_textproc:_make_strip_ing")
+    process asks (there is no driver-side registry to reach executors)."""
+    fn = tp.resolve_plugin("tests.test_textproc:_make_strip_ing")
     assert fn("Running") == "runn"
+    assert tp.resolve_plugin("lower") is str.lower
 
 
 def test_porter_backend_through_spark_parse(spark):
@@ -209,12 +209,12 @@ def test_subprocess_lemmatizer_lifecycle_local():
     assert lem("Attacking") == "attacking"        # memo hit, same answer
     # the seam memoizes per process: same backend object, ONE child
     dotted = "arekit_r335_spark.functions.extproc:subprocess_lower_factory"
-    a, b = tp.get_lemmatizer(dotted), tp.get_lemmatizer(dotted)
+    a, b = tp.resolve_plugin(dotted), tp.resolve_plugin(dotted)
     assert a is b
     a("X")  # usable
     a.close()
     assert not a.alive and a.proc.returncode is not None  # reaped, no zombie
-    tp._LEMMATIZER_CACHE.pop(dotted, None)
+    tp._PLUGINS.pop(dotted, None)
     lem.close()
 
 
@@ -260,3 +260,52 @@ def test_subprocess_lemmatizer_through_spark_parse(spark):
     assert len(markers) >= 1
     assert len(workers) == len(set(workers)), markers
     _os.remove(_SPAWN_LOG)
+
+
+_TAGGER_LOG = "/tmp/arekit_tagger_spawn_markers.log"
+
+
+def _logged_tagger_factory():
+    """Test POS-tagger factory: the default tagger plus a construction
+    marker "<worker_pid>" per call."""
+    import os as _os
+
+    from arekit_r335_spark.operators.formatters import default_pos_tagger
+    with open(_TAGGER_LOG, "a") as f:
+        f.write(f"{_os.getpid()}\n")
+    return default_pos_tagger
+
+
+def test_pos_tagger_built_once_per_worker(spark):
+    """The POS tagger goes through the same per-process resolver as the
+    lemmatizer: on an 8-partition annotated parse every Python worker
+    builds it exactly once, not once per task."""
+    import os as _os
+
+    from arekit_r335_spark.config import PipelineConfig
+    from arekit_r335_spark.lexicons import FramesLexicon
+    from arekit_r335_spark.operators.parse import parse_transcripts
+
+    if _os.path.exists(_TAGGER_LOG):
+        _os.remove(_TAGGER_LOG)
+    lex = FramesLexicon(variants={"attack": "f_attack"}, max_variant_len=3,
+                        polarity={"f_attack": "neg"}, prob={})
+    rows = [(f"c{i}", 0, "user", f"[e{i}] attacks [x{i}]", None, None)
+            for i in range(64)]
+    tr = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp").repartition(8)
+    parsed = parse_transcripts(
+        tr, lex, PipelineConfig(), with_terms=True, groups={"e0": "g0"},
+        pos_tagger="tests.test_textproc:_logged_tagger_factory")
+    assert parsed.rdd.getNumPartitions() == 8
+    got = parsed.select("conv_id", "terms").collect()
+    assert len(got) == 64
+    assert all(t.osuf == "" and t.esuf == "ь"
+               for r in got for t in r.terms if t.kind == 2)
+
+    with open(_TAGGER_LOG) as f:
+        workers = [line.strip() for line in f if line.strip()]
+    _os.remove(_TAGGER_LOG)
+    assert workers
+    assert len(workers) == len(set(workers)), workers

@@ -70,12 +70,10 @@ def phase_write(sink_dir: str, out_json: str) -> None:
 
 def phase_read(sink_dir: str, out_json: str) -> None:
     from arekit_r335_spark.datagen import repo_data_dir
-    from arekit_r335_spark.lexicons import KgInputs, load_synonym_seed
-    from arekit_r335_spark.operators.canonical import (canonical_edges,
-                                                       connected_components,
-                                                       group_alias_edges)
+    from arekit_r335_spark.lexicons import KgInputs
+    from arekit_r335_spark.operators.canonical import (alias_components,
+                                                       canonical_edges)
     from arekit_r335_spark.operators.graph import node_degrees, pagerank
-    from arekit_r335_spark.operators.grouping import seed_groups_df
     from arekit_r335_spark.runner import read_opinions
 
     data_dir = repo_data_dir(SF)
@@ -91,11 +89,7 @@ def phase_read(sink_dir: str, out_json: str) -> None:
         # the alias-CC map is part of every analytics read (NOT pre-cached:
         # each timed query pays the full read-the-sink cost)
         ops = read_opinions(spark, sink_dir).drop("bucket")
-        seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
-        aliases = spark.read.parquet(inputs.aliases)
-        comps = connected_components(
-            group_alias_edges(spark, aliases, seed_df))
-        return canonical_edges(comps, ops)
+        return canonical_edges(alias_components(spark, inputs), ops)
 
     ops_rows = read_opinions(spark, sink_dir).count()
     pr_cold, pr_rows = run(lambda: pagerank(edges(), n_iter=5))

@@ -43,12 +43,9 @@ def measure(spark, data_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from arekit_r335_spark.config import PipelineConfig
-    from arekit_r335_spark.lexicons import FramesLexicon, KgInputs, \
-        load_synonym_seed
-    from arekit_r335_spark.operators.canonical import (canonical_edges,
-                                                       connected_components,
-                                                       group_alias_edges)
-    from arekit_r335_spark.operators.grouping import seed_groups_df
+    from arekit_r335_spark.lexicons import FramesLexicon, KgInputs
+    from arekit_r335_spark.operators.canonical import (alias_components,
+                                                       canonical_edges)
     from arekit_r335_spark.pipeline import build_triple_pipeline
 
     inputs = KgInputs.at(data_dir)
@@ -67,11 +64,8 @@ def measure(spark, data_dir: str) -> dict:
         plan = res.triples._jdf.queryExecution().executedPlan().toString()
         out["aqe_skew_split_triples"] = "skew=true" in plan
 
-        seed_df = seed_groups_df(spark, load_synonym_seed(inputs.synonyms))
-        aliases = spark.read.parquet(inputs.aliases)
-        comps = connected_components(
-            group_alias_edges(spark, aliases, seed_df))
-        edges = canonical_edges(comps, res.doc_opinions)
+        edges = canonical_edges(alias_components(spark, inputs),
+                                res.doc_opinions)
         t0 = time.time()
         out["n_edges"] = edges.count()
         out["edges_s"] = round(time.time() - t0, 2)
