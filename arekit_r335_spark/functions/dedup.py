@@ -36,6 +36,26 @@ def minhash_signatures(documents: DataFrame, n: int = 3, k: int = 8) -> DataFram
     return fingerprints(documents, n=n, salts=salts).drop("md5_norm")
 
 
+def _band_pairs(sig: DataFrame, band_cols: list) -> DataFrame:
+    """Banded candidate join: ``band_cols`` are one ``struct(band, key)``
+    per band over ``sig``'s rows; docs sharing any (band, key) bucket
+    become distinct (doc_a, doc_b) pairs with doc_a < doc_b."""
+    banded = (sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
+              .select("doc_id", F.col("bk.band").alias("band"),
+                      F.col("bk.key").alias("key")))
+    # both sides of the self-join read the banded signatures — materialize
+    # once instead of recomputing the signature subtree per side
+    banded = banded.localCheckpoint(eager=False)
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (a.join(b, (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.key") == F.col("b.key"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct())
+
+
 def lsh_candidate_pairs(documents: DataFrame, n: int = 3, k: int = 8,
                         bands: int = 4) -> DataFrame:
     """MinHash-LSH candidate pairs: signatures banded into ``bands`` groups of
@@ -47,20 +67,7 @@ def lsh_candidate_pairs(documents: DataFrame, n: int = 3, k: int = 8,
                  F.concat_ws("#", *[F.col(f"minhash_{b * rows + r}")
                                     for r in range(rows)]).alias("key"))
         for b in range(bands)]
-    banded = (sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
-              .select("doc_id", F.col("bk.band").alias("band"),
-                      F.col("bk.key").alias("key")))
-    # both sides of the self-join read the banded signatures — materialize
-    # once instead of recomputing the shingle+minhash subtree per side
-    banded = banded.localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    return _band_pairs(sig, band_cols)
 
 
 def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
@@ -163,19 +170,7 @@ def simhash_near_pairs(documents: DataFrame, bits: int = 32,
                  F.shiftright(F.col("simhash"), b * width)
                  .bitwiseAND((1 << width) - 1).alias("key"))
         for b in range(bands)]
-    banded = (sig.select("doc_id",
-                         F.explode(F.array(*band_cols)).alias("bk"))
-              .select("doc_id", F.col("bk.band").alias("band"),
-                      F.col("bk.key").alias("key"))
-              .localCheckpoint(eager=False))
-    cand = (banded.alias("a")
-            .join(banded.alias("b"),
-                  (F.col("a.band") == F.col("b.band"))
-                  & (F.col("a.key") == F.col("b.key"))
-                  & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    cand = _band_pairs(sig, band_cols)
     sa = sig.select(F.col("doc_id").alias("doc_a"),
                     F.col("simhash").alias("sim_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"),

@@ -99,7 +99,7 @@ def alias_components(spark: SparkSession, inputs: KgInputs) -> DataFrame:
     lookup, else the open-world ``u:`` key); a pair inside one group is a
     self-edge, which ``connected_components`` drops. Only groups touched by
     an alias become nodes; every other group is its own component, which
-    consumers express as ``coalesce(component, group_key)``.
+    :func:`canonical_ids` applies.
 
     No alias path means no edges; so does a missing alias table, with a
     warning: canonicalization then runs on seed-group identity only.
@@ -126,37 +126,43 @@ def alias_components(spark: SparkSession, inputs: KgInputs) -> DataFrame:
     return connected_components(a.select("src", "dst"))
 
 
-def canonical_nodes(mentions: DataFrame, components: DataFrame) -> DataFrame:
-    """Canonical node table (S12): one row per component with its member
-    groups/values. Groups never touched by an edge stay their own component."""
-    m = mentions.join(components.withColumnRenamed("node", "group_key"),
-                      "group_key", "left")
-    m = m.withColumn("canon_id",
-                     F.coalesce(F.col("component"), F.col("group_key")))
-    return (m.groupBy("canon_id")
+def canonical_ids(df: DataFrame, comps: DataFrame, key: str = "group_key",
+                  out: str = "canon_id") -> DataFrame:
+    """The one canonical-identity rule: ``df`` with ``out`` = the alias
+    component of its ``key`` group, or the group itself when no alias
+    touches it.  ``comps`` is the (node, component) map of
+    :func:`alias_components` — dictionary-sized, so the join broadcasts.
+    No ``component`` column is left behind."""
+    cmap = comps.select(F.col("node").alias(key), "component")
+    return (df.join(F.broadcast(cmap), key, "left")
+            .withColumn(out, F.coalesce(F.col("component"), F.col(key)))
+            .drop("component"))
+
+
+def canonical_nodes(rows: DataFrame, comps: DataFrame) -> DataFrame:
+    """Canonical node table (S12) from (group_key, canon_value, n_mentions)
+    rows — one group may span several rows (one per bucket partial):
+
+        (canon_id, group_keys, canon_value, n_mentions)
+
+    ``collect_set``, ``min`` and ``sum`` each compose with themselves, so
+    the rollup needs no per-group pre-aggregation."""
+    return (canonical_ids(rows, comps)
+            .groupBy("canon_id")
             .agg(F.array_sort(F.collect_set("group_key")).alias("group_keys"),
-                 F.array_sort(F.collect_set("value")).alias("values"),
-                 F.count("*").cast("long").alias("n_mentions")))
+                 F.min("canon_value").alias("canon_value"),
+                 F.sum("n_mentions").cast("long").alias("n_mentions")))
 
 
 def canonical_edges(comps: DataFrame, doc_opinions: DataFrame) -> DataFrame:
     """Canonical edge rollup over ANY doc-opinion table (inline pipeline
     output or the runner's materialized ``opinions`` sink): J9 priority
-    dedup per (conv, s, t), alias-CC re-pointing (dictionary-sized ->
-    broadcast joins), (src, dst, label) aggregate.  ``comps`` is the
-    alias-CC component map (:func:`alias_components`) — identical for
-    every consumer."""
+    dedup per (conv, s, t), alias-CC re-pointing of both endpoints
+    (:func:`canonical_ids`), (src, dst, label) aggregate."""
     w = Window.partitionBy("conv_id", "s_group", "t_group").orderBy("priority")
     ops = (doc_opinions.withColumn("__rn", F.row_number().over(w))
            .filter(F.col("__rn") == 1).drop("__rn"))
-    cs = comps.select(F.col("node").alias("s_group"),
-                      F.col("component").alias("s_comp"))
-    ct = comps.select(F.col("node").alias("t_group"),
-                      F.col("component").alias("t_comp"))
-    return (ops.join(F.broadcast(cs), "s_group", "left")
-            .join(F.broadcast(ct), "t_group", "left")
-            .select(F.coalesce("s_comp", F.col("s_group")).alias("src"),
-                    F.coalesce("t_comp", F.col("t_group")).alias("dst"),
-                    "label")
-            .groupBy("src", "dst", "label")
+    ops = canonical_ids(ops, comps, key="s_group", out="src")
+    ops = canonical_ids(ops, comps, key="t_group", out="dst")
+    return (ops.groupBy("src", "dst", "label")
             .agg(F.count("*").cast("long").alias("n_ops")))

@@ -49,6 +49,8 @@ UPPERCASE = EntityMasks("E_SUBJ", "E_OBJ", "ENTITY")
 RU_NOCASED = EntityMasks("субъект", "объект", "сущность")
 
 # ------------------------------------------------------- RU cased formatter
+# the cased formatter's mask TEMPLATES: each mask is template || suffix
+RU_CASED = EntityMasks("субъект", "объект", "сущност")
 # Russian grammatical cases (processing/languages/ru/cases.py enum order).
 UNKN, NOM, GEN, DAT, ACC, INS, ABL = range(7)
 SINGLE, MULTI = 0, 1
@@ -94,7 +96,8 @@ def ru_cased_masks(value: str,
                    pos_tagger: PosTagger = default_pos_tagger) -> EntityMasks:
     """Full cased-formatter output for one value (all three roles)."""
     osuf, esuf = cased_suffixes(value, pos_tagger)
-    return EntityMasks("субъект" + osuf, "объект" + osuf, "сущност" + esuf)
+    return EntityMasks(RU_CASED.subject + osuf, RU_CASED.object + osuf,
+                       RU_CASED.other + esuf)
 
 
 FORMATTERS: dict[str, EntityMasks] = {

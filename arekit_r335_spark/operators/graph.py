@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .canonical import canonical_ids
+
 
 def node_degrees(edges: DataFrame) -> DataFrame:
     """Per-node in/out degree (distinct neighbors) and opinion mass over the
@@ -57,12 +59,10 @@ def node_degrees(edges: DataFrame) -> DataFrame:
 def conv_entity_sets(mentions: DataFrame, comps: DataFrame,
                      max_entities_per_conv: int | None = None) -> DataFrame:
     """Distinct (conv_id, canon) pairs: each conversation's canonical entity
-    set.  ``comps`` is the alias connected-component map (node, component),
-    dictionary-sized, so the re-pointing join broadcasts."""
-    cmap = comps.select(F.col("node").alias("group_key"), "component")
-    ents = (mentions.join(F.broadcast(cmap), "group_key", "left")
-            .select("conv_id",
-                    F.coalesce("component", F.col("group_key")).alias("canon"))
+    set.  ``comps`` is the alias connected-component map (node, component)
+    that :func:`canonical.canonical_ids` re-points the groups through."""
+    ents = (canonical_ids(mentions, comps, out="canon")
+            .select("conv_id", "canon")
             .distinct())
     if max_entities_per_conv is not None:
         per = ents.groupBy("conv_id").agg(F.count("*").alias("__n"))
@@ -383,10 +383,7 @@ def neighbor_jaccard(und: DataFrame, min_common: int = 1) -> DataFrame:
     same cost envelope as triangle counting (a production deployment adds
     the degree-ordered orientation cap for celebrity hubs; co-occurrence
     graphs here are pre-bounded by max_entities_per_conv upstream)."""
-    sym = (und.select(F.least("u", "v").alias("u"),
-                      F.greatest("u", "v").alias("v"))
-           .filter(F.col("u") != F.col("v"))
-           .distinct())
+    sym = _simple(und)
     sym = (sym.unionAll(sym.select(F.col("v").alias("u"),
                                    F.col("u").alias("v")))
            .localCheckpoint(eager=False))

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .aggregate import label_to_int
 from .parse import KIND_CODES
 
 def _default_uint_scale() -> dict[str, int]:
@@ -85,13 +86,13 @@ def build_samples(triples_pos: DataFrame, parsed_terms: DataFrame,
     declension suffixes must already ride the terms (parse with
     ``pos_tagger=...``): mask = template || term.osuf/esuf, still zero
     per-value literals."""
-    from .formatters import FORMATTERS
+    from .formatters import FORMATTERS, RU_CASED
 
     if entity_fmt == "ru_cased":
         def masks_of(term):
-            return (F.concat(F.lit("субъект"), term["osuf"]),
-                    F.concat(F.lit("объект"), term["osuf"]),
-                    F.concat(F.lit("сущност"), term["esuf"]))
+            return (F.concat(F.lit(RU_CASED.subject), term["osuf"]),
+                    F.concat(F.lit(RU_CASED.object), term["osuf"]),
+                    F.concat(F.lit(RU_CASED.other), term["esuf"]))
     else:
         mk = FORMATTERS[entity_fmt]
 
@@ -142,14 +143,10 @@ def build_samples(triples_pos: DataFrame, parsed_terms: DataFrame,
         # template placeholders render the role masks (text_pair.py:38-44);
         # for the cased formatter the placeholder is value-independent, so
         # the bare (UNKN-case) template is used
-        if entity_fmt == "ru_cased":
-            subj_ph, obj_ph = "субъект", "объект"
-        else:
-            subj_ph, obj_ph = FORMATTERS[entity_fmt].subject, \
-                FORMATTERS[entity_fmt].object
+        mk = RU_CASED if entity_fmt == "ru_cased" else FORMATTERS[entity_fmt]
         pre, _, post = text_b_template.partition("{context}")
-        pre = pre.format(subject=subj_ph, object=obj_ph)
-        post = post.format(subject=subj_ph, object=obj_ph)
+        pre = pre.format(subject=mk.subject, object=mk.object)
+        post = post.format(subject=mk.subject, object=mk.object)
         text_b = F.concat(F.lit(pre), ctx, F.lit(post))
 
     ent_terms = F.filter(terms, lambda x: x["kind"] == KIND_CODES["e"])
@@ -168,11 +165,8 @@ def build_samples(triples_pos: DataFrame, parsed_terms: DataFrame,
 
     # label scaler (labels.LabelScaler) — the configurable label<->uint
     # bijection of the reference's BaseLabelScaler; default = 3-class
-    scale = uint_scale if uint_scale is not None else _default_uint_scale()
-    label_uint = F.lit(None).cast("int")
-    for lab, v in sorted(scale.items()):
-        label_uint = F.when(F.col("t.label") == lab,
-                            F.lit(v)).otherwise(label_uint)
+    label_uint = label_to_int(F.col("t.label"),
+                              uint_scale or _default_uint_scale())
 
     cols = [
         F.concat(F.lit("o"), F.col("t.conv_id"), F.lit("_"),

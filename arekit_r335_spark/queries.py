@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from .config import PipelineConfig
 from .datagen import repo_data_dir
 from .lexicons import FramesLexicon, KgInputs, load_synonym_seed
-from .operators.canonical import alias_components, canonical_edges
+from .operators.canonical import (alias_components, canonical_edges,
+                                  canonical_ids)
 from .operators.parse import parse_transcripts
 from .pipeline import TriplePipelineResult, build_triple_pipeline
 
@@ -373,16 +374,10 @@ def q_kg_canonical_nodes(spark, sf_dir):
     """J7b north-rule canonicalization: alias edges over group keys ->
     connected components (iterative joins + checkpointing) -> canonical id
     per synonym group. (group_key, canon_id, n_mentions)."""
-    mentions = _noframes_mentions(spark, sf_dir)
-    comps = _comps(spark, sf_dir)
-    grp = (mentions.groupBy("group_key")
+    grp = (_noframes_mentions(spark, sf_dir).groupBy("group_key")
            .agg(F.count("*").cast("long").alias("n_mentions")))
-    out = grp.join(comps.withColumnRenamed("node", "group_key"),
-                   "group_key", "left")
-    return out.select(
-        "group_key",
-        F.coalesce(F.col("component"), F.col("group_key")).alias("canon_id"),
-        "n_mentions")
+    return (canonical_ids(grp, _comps(spark, sf_dir))
+            .select("group_key", "canon_id", "n_mentions"))
 
 
 def q_knn_bruteforce(spark, sf_dir):
@@ -1130,13 +1125,8 @@ def q_kg_entity_salience(spark, sf_dir):
     aggregate, a one-row broadcast total, and a conv-partitioned window;
     ranking on the 1e6-rounded integer score."""
     from pyspark.sql import Window
-    mentions = _noframes_mentions(spark, sf_dir)
-    comps = _comps(spark, sf_dir)
-    mc = (mentions
-          .join(F.broadcast(comps.withColumnRenamed("node", "group_key")),
-                "group_key", "left")
-          .select("conv_id",
-                  F.coalesce("component", F.col("group_key")).alias("canon"))
+    mc = (canonical_ids(_noframes_mentions(spark, sf_dir),
+                        _comps(spark, sf_dir), out="canon")
           .groupBy("conv_id", "canon")
           .agg(F.count("*").cast("long").alias("n_mentions")))
     dfq = mc.groupBy("canon").agg(
@@ -1216,14 +1206,11 @@ def q_kg_entity_timeline(spark, sf_dir):
     sized and broadcasts."""
     _, inputs = _kg(spark, sf_dir)
     mentions = _noframes_mentions(spark, sf_dir)
-    comps = _comps(spark, sf_dir)
     tt = (spark.read.parquet(inputs.transcripts)
           .select("conv_id", "turn_idx", "ts"))
-    m = (mentions.join(tt, ["conv_id", "turn_idx"])
-         .join(F.broadcast(comps.withColumnRenamed("node", "group_key")),
-               "group_key", "left")
-         .select(F.coalesce("component", F.col("group_key"))
-                 .alias("canon_id"),
+    m = (canonical_ids(mentions.join(tt, ["conv_id", "turn_idx"]),
+                       _comps(spark, sf_dir))
+         .select("canon_id",
                  F.floor(F.unix_timestamp("ts") / F.lit(86400))
                  .cast("long").alias("day_idx")))
     return (m.groupBy("canon_id")

@@ -42,6 +42,17 @@ from .pipeline import build_triple_pipeline
 SINK_EPOCH = 2
 
 
+def overwrite_partitions(df: DataFrame, path: str,
+                         partition_col: str) -> None:
+    """Parquet dynamic-partition overwrite (see
+    :meth:`GraphSink.write_overwrite_partitions`)."""
+    # per-write option: a session conf would turn every later
+    # partitioned overwrite in the session dynamic too
+    (df.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(partition_col).parquet(path))
+
+
 @dataclass(frozen=True)
 class GraphSink:
     """Sink locations + the pluggable TABLE FORMAT seam (round-3 verdict
@@ -109,11 +120,7 @@ class GraphSink:
                 return
             df.writeTo(self.path(name)).overwritePartitions()
             return
-        # per-write option: a session conf would turn every later
-        # partitioned overwrite in the session dynamic too
-        (df.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(partition_col).parquet(self.path(name)))
+        overwrite_partitions(df, self.path(name), partition_col)
 
     def write_overwrite(self, df: DataFrame, name: str) -> None:
         if self.fmt == "iceberg":
@@ -298,24 +305,11 @@ def finalize_nodes(spark: SparkSession, inputs: KgInputs,
 
     Idempotent — safe to re-run after any number of incremental buckets.
     """
-    from .operators.canonical import alias_components
+    from .operators.canonical import alias_components, canonical_nodes
 
     sink = GraphSink(sink_dir, fmt)
-    partials = sink.read(spark, "nodes_partial")
-    groups = (partials.groupBy("group_key")
-              .agg(F.min("canon_value").alias("canon_value"),
-                   F.sum("n_mentions").cast("long").alias("n_mentions")))
-
-    comps = alias_components(spark, inputs)
-    nodes = (groups
-             .join(comps.withColumnRenamed("node", "group_key"),
-                   "group_key", "left")
-             .withColumn("canon_id",
-                         F.coalesce(F.col("component"), F.col("group_key")))
-             .groupBy("canon_id")
-             .agg(F.array_sort(F.collect_set("group_key")).alias("group_keys"),
-                  F.min("canon_value").alias("canon_value"),
-                  F.sum("n_mentions").cast("long").alias("n_mentions")))
+    nodes = canonical_nodes(sink.read(spark, "nodes_partial"),
+                            alias_components(spark, inputs))
     sink.write_overwrite(nodes, "nodes")
     return sink.read(spark, "nodes").count()
 

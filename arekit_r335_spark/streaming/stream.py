@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..lexicons import KgInputs
 from ..pipeline import build_triple_pipeline
+from ..runner import overwrite_partitions
 
 
 def stream_transcripts(spark: SparkSession, input_dir: str,
@@ -49,11 +50,9 @@ def stream_triples_to_sink(spark: SparkSession, inputs: KgInputs,
         # committed batches keep their partitions, the in-flight batch
         # replaces its half-written one; a kill -9 at any point yields
         # exactly-once effective output (crash-resume evidence: BASELINE.md).
-        (res.triples.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(out_dir))
+        overwrite_partitions(
+            res.triples.withColumn("batch_id", F.lit(batch_id)), out_dir,
+            "batch_id")
 
     return (stream.writeStream
             .option("checkpointLocation", checkpoint_dir)

@@ -2,7 +2,8 @@
 
 from pyspark.sql import functions as F
 
-from arekit_r335_spark.operators.canonical import (canonical_nodes,
+from arekit_r335_spark.operators.canonical import (canonical_ids,
+                                                   canonical_nodes,
                                                    connected_components)
 
 
@@ -44,15 +45,29 @@ def test_cc_partition_invariance(spark):
 
 
 def test_canonical_nodes_rollup(spark):
-    mentions = spark.createDataFrame(
-        [("c1", "usa", "g0"), ("c1", "america", "g0"),
-         ("c2", "dm", "u:dm"), ("c2", "deepmind", "u:deepmind")],
-        "conv_id string, value string, group_key string")
+    # node partials as the runner writes them: group u:dm spans two buckets
+    rows = spark.createDataFrame(
+        [("g0", "america", 2), ("u:dm", "dm", 1), ("u:dm", "d-m", 3),
+         ("u:deepmind", "deepmind", 1)],
+        "group_key string, canon_value string, n_mentions long")
     comps = spark.createDataFrame(
         [("u:dm", "u:deepmind"), ("u:deepmind", "u:deepmind")],
         "node string, component string")
-    nodes = {r.canon_id: (list(r.group_keys), r.n_mentions)
-             for r in canonical_nodes(mentions, comps).collect()}
-    assert nodes["g0"] == (["g0"], 2)
-    assert nodes["u:deepmind"] == (["u:deepmind", "u:dm"], 2) or \
-        nodes["u:deepmind"][1] == 2
+    out = canonical_nodes(rows, comps)
+    assert out.columns == ["canon_id", "group_keys", "canon_value",
+                           "n_mentions"]
+    nodes = {r.canon_id: (list(r.group_keys), r.canon_value, r.n_mentions)
+             for r in out.collect()}
+    assert nodes == {"g0": (["g0"], "america", 2),
+                     "u:deepmind": (["u:deepmind", "u:dm"], "d-m", 5)}
+
+
+def test_canonical_ids(spark):
+    df = spark.createDataFrame([("c1", "u:dm"), ("c2", "g0")],
+                               "conv_id string, group_key string")
+    comps = spark.createDataFrame([("u:dm", "u:deepmind")],
+                                  "node string, component string")
+    out = canonical_ids(df, comps)
+    assert out.columns == ["group_key", "conv_id", "canon_id"]
+    assert ({r.group_key: r.canon_id for r in out.collect()}
+            == {"u:dm": "u:deepmind", "g0": "g0"})

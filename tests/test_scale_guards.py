@@ -84,6 +84,15 @@ def test_engine_imports_no_oracle():
     assert _grep(r"from \.+oracle\b|arekit_r335_spark\.oracle\b") == []
 
 
+def test_canonical_id_one_place():
+    # a synonym group's canonical id is its alias component, or the group
+    # itself: canonical.canonical_ids is the one place that rule is written
+    hits = [h for h in _grep(r'coalesce\(\s*(F\.col\()?"component"')
+            if not h.startswith(os.path.join(PKG, "operators",
+                                             "canonical.py") + ":")]
+    assert hits == []
+
+
 def test_corpus_scaled_parameters_grow_with_n():
     """Round-3 verdict item 3: every corpus-sized fixture parameter derives
     from N — bucket bits (class balancing), sampling buckets (negative
