@@ -13,10 +13,6 @@ from dataclasses import dataclass, field
 
 NO_LABEL = "nolabel"
 
-# Entity-type whitelist of the reference's RuAttitudes filter
-# (``arekit/contrib/utils/pipelines/sources/ruattitudes/entity_filter.py:10``).
-DEFAULT_TYPE_WHITELIST = ("GPE", "PERSON", "LOCAL", "GEO", "ORG")
-
 # Negation lexicon — the EN analog of the reference's RussianLanguageMods
 # negation check (``arekit/contrib/utils/pipelines/items/text/frames_negation.py:14-28``).
 NEGATION_WORDS = ("not", "no", "never", "без", "не")

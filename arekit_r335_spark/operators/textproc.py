@@ -97,13 +97,6 @@ def split_word(word: str) -> list[Term]:
     return out
 
 
-def detect_entity(word: str) -> str | None:
-    """Bracket detector (entities_default.py:14-17); returns lowercased value."""
-    if len(word) > 2 and word[0] == "[" and word[-1] == "]":
-        return word[1:-1].lower()
-    return None
-
-
 def tokenize_turn(text: str) -> list[Term]:
     """T1 (whitespace split) + S8 (entity detect) + T2/T8 (tokenizer).
 

@@ -308,10 +308,12 @@ def finalize_nodes(spark: SparkSession, inputs: KgInputs,
     from .operators.canonical import alias_components, canonical_nodes
 
     sink = GraphSink(sink_dir, fmt)
-    nodes = canonical_nodes(sink.read(spark, "nodes_partial"),
-                            alias_components(spark, inputs))
+    obs = Observation("nodes")
+    nodes = (canonical_nodes(sink.read(spark, "nodes_partial"),
+                             alias_components(spark, inputs))
+             .observe(obs, F.count(F.lit(1)).alias("n_nodes")))
     sink.write_overwrite(nodes, "nodes")
-    return sink.read(spark, "nodes").count()
+    return obs.get["n_nodes"]
 
 
 def read_edges(spark: SparkSession, sink_dir: str,

@@ -70,7 +70,6 @@ RECORD_SCHEMA = StructType([
     StructField("label_int", IntegerType()),
     StructField("tag", StringType()),
 ])
-_NCOL = len(RECORD_SCHEMA.fields)
 
 
 def _obj_row(doc_key, sent_index, is_title, line):

@@ -5,8 +5,11 @@ batch-only reference): ``readStream`` on a transcripts directory ->
 Semantics note: triple extraction is per-conversation, so the stream is
 correct when a conversation arrives within one micro-batch (file-per-conv or
 session-ized upstream). ``foreachBatch`` reuses the identical DataFrame plan
-as the batch path — no second implementation to drift. A watermark on ``ts``
-bounds state for the windowed per-turn statistics query.
+as the batch path — no second implementation to drift. Each micro-batch
+parses once: one eager parse checkpoint, which every downstream branch reads,
+sized by the batch's own partition count (``parse_transcripts``); there is no
+separate emptiness job. A watermark on ``ts`` bounds state for the windowed
+per-turn statistics query.
 """
 
 from __future__ import annotations
@@ -39,10 +42,10 @@ def stream_triples_to_sink(spark: SparkSession, inputs: KgInputs,
     stream = stream_transcripts(spark, stream_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # A file source builds no batch without new files; a zero-row
+        # batch flows through and writes no rows.
         res = build_triple_pipeline(spark, inputs, cfg,
-                                    transcripts=batch_df, persist=False)
+                                    transcripts=batch_df, persist=True)
         # foreachBatch is at-least-once: a batch that wrote output but died
         # before the checkpoint commit is REPLAYED on restart with the SAME
         # batch_id (offsets come from the checkpoint WAL). Dynamic overwrite

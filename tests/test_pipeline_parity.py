@@ -118,14 +118,18 @@ def test_partition_count_invariance(spark, sf0001_dir):
     """Same triples regardless of input partitioning (SURVEY.md §4 item 3).
     Each input is checkpointed so its partition count reaches the parse: a
     bare repartition(n) collapses into the parse's own conv_id
-    repartition, and both sides would run one plan."""
+    repartition, and both sides would run one plan. The wide input has
+    spark.sql.shuffle.partitions partitions, so the parse keeps them; the
+    1-partition input is below that and reaches the parse through the
+    conv_id repartition, which AQE coalesces to one task here."""
     from arekit_r335_spark.operators.parse import parse_transcripts
 
     inputs = KgInputs.at(sf0001_dir)
     frames = FramesLexicon.from_json(inputs.frames)
     tr = spark.read.parquet(inputs.transcripts)
+    wide = int(spark.conf.get("spark.sql.shuffle.partitions"))
     triples = []
-    for n in (1, 16):
+    for n in (1, wide):
         part = tr.repartition(n).localCheckpoint(eager=True)
         assert parse_transcripts(part, frames, PipelineConfig()) \
             .rdd.getNumPartitions() == n
@@ -139,27 +143,44 @@ def test_parse_sized_by_input(spark, sf0001_dir):
     """The parse repartition carries no count, so AQE coalescing sizes the
     Python stage from the shuffle bytes: the small fixture parses in fewer
     tasks than spark.sql.shuffle.partitions, with the same rows as a parse
-    of a 16-way repartitioned input."""
+    of an input that already has that many partitions."""
     from arekit_r335_spark.operators.parse import parse_transcripts
 
     inputs = KgInputs.at(sf0001_dir)
     frames = FramesLexicon.from_json(inputs.frames)
     cfg = PipelineConfig()
     tr = spark.read.parquet(inputs.transcripts)
+    wide = int(spark.conf.get("spark.sql.shuffle.partitions"))
     parsed = parse_transcripts(tr, frames, cfg).localCheckpoint(eager=True)
-    assert parsed.rdd.getNumPartitions() < int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
+    assert parsed.rdd.getNumPartitions() < wide
 
     def rows(df):
         return sorted(df.collect(), key=lambda r: (r.conv_id, r.turn_idx))
 
-    # checkpointed so the 16-way split reaches the parse: a bare
-    # repartition(16) collapses into the parse's own conv_id repartition
-    ref = parse_transcripts(tr.repartition(16).localCheckpoint(eager=True),
+    # checkpointed so the wide split reaches the parse: a bare
+    # repartition(n) collapses into the parse's own conv_id repartition
+    ref = parse_transcripts(tr.repartition(wide).localCheckpoint(eager=True),
                             frames, cfg)
-    assert ref.rdd.getNumPartitions() == 16
+    assert ref.rdd.getNumPartitions() == wide
     got = rows(parsed)
     assert got and got == rows(ref)
+
+
+def test_scan_splits_of_unlisted_input(spark):
+    """An input with no file listing reports its LogicalRDD leaves'
+    partition counts (a foreachBatch micro-batch, a checkpoint), through
+    filters and unions; a repartitioned plan or any other unlisted leaf
+    keeps the assume-parallel sentinel."""
+    import pandas as pd
+
+    from arekit_r335_spark.operators.parse import _estimated_scan_splits
+
+    ck = spark.range(100).repartition(3).localCheckpoint()
+    assert _estimated_scan_splits(ck) == 3
+    assert _estimated_scan_splits(ck.filter("id > 5").union(ck)) == 6
+    assert _estimated_scan_splits(ck.repartition(8)) == 1 << 30
+    local = spark.createDataFrame(pd.DataFrame({"id": [1, 2]}))
+    assert _estimated_scan_splits(local) == 1 << 30
 
 
 def test_entity_type_lookup_is_local_relation(spark):

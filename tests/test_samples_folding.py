@@ -156,6 +156,18 @@ def test_folding_ops(spark):
     assert un.count() == 60
 
 
+def test_fixed_folding(spark):
+    """C2: the explicit (doc, data_type) map comes back row for row, and
+    composes with the other folds through united_folding."""
+    from arekit_r335_spark.operators.folding import (
+        TEST, TRAIN, fixed_folding, united_folding)
+    pairs = [("c0", TRAIN), ("c1", TRAIN), ("c2", TEST)]
+    fx = fixed_folding(pairs, spark)
+    assert fx.columns == ["conv_id", "data_type"]
+    assert sorted(tuple(r) for r in fx.collect()) == sorted(pairs)
+    assert united_folding(fx, fx).count() == 6
+
+
 def test_brat_ingestion(spark):
     from arekit_r335_spark.sources.brat import (
         assign_entities_to_sentences, merge_overlapping_entities,

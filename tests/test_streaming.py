@@ -48,6 +48,70 @@ def test_stream_triples_match_batch(spark, sf0001_dir, tmp_path):
     assert got == want
 
 
+def _run_stream(spark, sf_dir, stream_dir, out_dir, ck):
+    from arekit_r335_spark.streaming.stream import stream_triples_to_sink
+    q = stream_triples_to_sink(spark, KgInputs.at(sf_dir), stream_dir,
+                               out_dir, ck)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    return q
+
+
+def _rows(spark, out_dir):
+    return sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
+
+
+def test_stream_parses_batch_once(spark, sf0001_dir, tmp_path):
+    """One eager parse per micro-batch: every branch reads the parse
+    checkpoint, so the batch's source reads each staged turn once."""
+    stream_dir = _stage_stream_input(spark, sf0001_dir, str(tmp_path / "s"))
+    q = _run_stream(spark, sf0001_dir, stream_dir, str(tmp_path / "out"),
+                    str(tmp_path / "ck"))
+    turns = spark.read.parquet(stream_dir).count()
+    assert q.recentProgress
+    assert [p.numInputRows for p in q.recentProgress] == \
+        [turns] * len(q.recentProgress)
+
+
+def test_stream_replays_uncommitted_batch(spark, sf0001_dir, tmp_path):
+    """foreachBatch is at-least-once: a batch whose output landed but whose
+    commit did not is replayed on restart under the same batch_id, and the
+    overwrite of its own partition leaves the output multiset unchanged."""
+    stream_dir = _stage_stream_input(spark, sf0001_dir, str(tmp_path / "s"))
+    out_dir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    _run_stream(spark, sf0001_dir, stream_dir, out_dir, ck)
+    before = _rows(spark, out_dir)
+    commits = os.path.join(ck, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+
+    q = _run_stream(spark, sf0001_dir, stream_dir, out_dir, ck)
+    assert [p.batchId for p in q.recentProgress if p.numInputRows] == [last]
+    assert before and _rows(spark, out_dir) == before
+    assert os.path.exists(os.path.join(commits, str(last)))
+
+
+def test_stream_zero_row_file_adds_no_rows(spark, sf0001_dir, tmp_path):
+    """A micro-batch of one zero-row file runs the pipeline to completion
+    and adds no rows (there is no separate emptiness check)."""
+    import pyarrow.parquet as pq
+
+    stream_dir = _stage_stream_input(spark, sf0001_dir, str(tmp_path / "s"))
+    out_dir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    _run_stream(spark, sf0001_dir, stream_dir, out_dir, ck)
+    before = _rows(spark, out_dir)
+    staged = sorted(os.listdir(stream_dir))
+    schema = pq.read_schema(os.path.join(stream_dir, staged[0]))
+    pq.write_table(schema.empty_table(),
+                   os.path.join(stream_dir, "zz_empty.parquet"))
+
+    q = _run_stream(spark, sf0001_dir, stream_dir, out_dir, ck)
+    assert [p.numInputRows for p in q.recentProgress] == [0]
+    assert before and _rows(spark, out_dir) == before
+
+
 def test_streaming_windowed_counts(spark, sf0001_dir, tmp_path):
     from arekit_r335_spark.streaming.stream import streaming_turn_rates
     stream_dir = _stage_stream_input(spark, sf0001_dir, str(tmp_path / "s2"))

@@ -88,6 +88,7 @@ def main(only: list[str], json_out: str | None = None) -> int:
     import threading
 
     import __spark_entry__ as entrymod
+    from arekit_r335_spark.config import ScaleConfig
     from arekit_r335_spark.session import get_spark
 
     qs = entrymod.queries()
@@ -98,7 +99,11 @@ def main(only: list[str], json_out: str | None = None) -> int:
         return len(unknown)
     sqls = entrymod.oracle_sql()
 
-    spark = get_spark(app_name="oracle-check", master="local[8]")
+    # the console progress bar shares stdout with the report: off, so every
+    # result line starts a line (`grep -c '^PASS'` counts the passes)
+    spark = get_spark(app_name="oracle-check", master="local[8]",
+                      scale=ScaleConfig(extra_conf={
+                          "spark.ui.showConsoleProgress": "false"}))
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -24,6 +24,14 @@ def formatted(df, mode: str = "formatted") -> str:
         .fromString(mode))
 
 
+def mask_locations(plan: str, roots: list[str]) -> str:
+    """Scan locations name the data root, which differs per checkout: a fixed
+    placeholder keeps a regenerated PLANS.md free of path-only diffs."""
+    for root in roots:
+        plan = plan.replace(f"file:{root}", "file:<data>")
+    return plan
+
+
 def summarize(plan: str, simple_plan: str) -> dict:
     """All counts derive from the SAME AQE-off build (formatted + simple
     modes of one plan), so the numbers are internally consistent."""
@@ -101,7 +109,8 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         off = build_all()
-        off_formatted = {k: formatted(v) for k, v in off.items()}
+        off_formatted = {k: mask_locations(formatted(v), [data_dir, sf_dir])
+                         for k, v in off.items()}
         off_simple = {k: formatted(v, "simple") for k, v in off.items()}
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
